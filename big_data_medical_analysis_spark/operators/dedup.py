@@ -29,6 +29,7 @@ The tiering is how 100 TB training-data dedup actually works:
 
 from __future__ import annotations
 
+import itertools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -716,6 +717,11 @@ def minhash_portable_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Per-call suffix for connected_components' bucketed edge table: two
+# concurrent calls in one driver must not drop each other's table.
+_CC_CALLS = itertools.count()
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
 ) -> DataFrame:
@@ -765,7 +771,7 @@ def connected_components(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
     n_buckets = int(os.environ.get("SPARK_GRAFT_CC_EDGE_BUCKETS", "8"))
-    t_edges = f"cc_edges_{os.getuid()}_{os.getpid()}"
+    t_edges = f"cc_edges_{os.getuid()}_{os.getpid()}_{next(_CC_CALLS)}"
     _drop_bucket_table(spark, t_edges)
     # repartition on the bucket key first so each task writes exactly ONE
     # bucket file (the r16 bucketed-write convention; one file per bucket
@@ -773,11 +779,7 @@ def connected_components(
     und_rows.repartition(n_buckets, "u").write.bucketBy(
         n_buckets, "u"
     ).sortBy("u").mode("overwrite").saveAsTable(t_edges)
-    # merge hint: pin the sort-merge join so the bucketed partitioning is
-    # what every round reuses (the table's real file stats are small at
-    # test scale and would otherwise flip the plan to a broadcast whose
-    # build re-reads the table per round)
-    und = spark.table(t_edges).hint("merge")
+    und = spark.table(t_edges)
     labels = (
         und.select(F.col("u").alias("node"))
         .distinct()
@@ -814,7 +816,12 @@ def connected_components(
     converged = False
     try:
         for _ in range(max_iter):
-            nbr = und.join(
+            # merge hint, on the join input only: pin the sort-merge join
+            # so the bucketed partitioning is what every round reuses (the
+            # table's real file stats are small at test scale and would
+            # otherwise flip the plan to a broadcast whose build re-reads
+            # the table per round)
+            nbr = und.hint("merge").join(
                 labels.withColumnRenamed("node", "u"), "u"
             ).select(F.col("v").alias("node"), "label")
             labels = (

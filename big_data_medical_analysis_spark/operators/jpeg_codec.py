@@ -287,8 +287,11 @@ def encode_jpeg(img: np.ndarray, quality: int = 75) -> bytes:
 # canonical Huffman code of length L owns exactly the 2^(16-L) table slots
 # prefixed by it. The LUT is a pure function of the DHT payload, memoized
 # process-wide (same footing as the _DCT constant — derived from the input
-# bytes of the CURRENT stream, not from any dataset).
+# bytes of the CURRENT stream, not from any dataset). Each entry is ~1 MB,
+# so the cache is capped and evicts its oldest entry: a long-lived executor
+# decoding per-image optimized tables must not grow without bound.
 _LUT_CACHE: dict[tuple[tuple[int, ...], tuple[int, ...]], tuple[list, list]] = {}
+_LUT_CACHE_MAX = 64
 
 
 def _build_lut(bits: list[int], vals: list[int]) -> tuple[list, list]:
@@ -302,6 +305,10 @@ def _build_lut(bits: list[int], vals: list[int]) -> tuple[list, list]:
     idx = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
+            if code >= 1 << length:
+                raise ValueError(
+                    "invalid Huffman table (code lengths over-subscribed)"
+                )
             lo = code << (16 - length)
             hi = (code + 1) << (16 - length)
             syms[lo:hi] = [vals[idx]] * (hi - lo)
@@ -309,6 +316,8 @@ def _build_lut(bits: list[int], vals: list[int]) -> tuple[list, list]:
             code += 1
             idx += 1
         code <<= 1
+    if len(_LUT_CACHE) >= _LUT_CACHE_MAX:
+        del _LUT_CACHE[next(iter(_LUT_CACHE))]
     _LUT_CACHE[key] = (syms, lens)
     return syms, lens
 
@@ -374,7 +383,13 @@ def decode_jpeg(content: bytes) -> np.ndarray:
                 tc, th = payload[p] >> 4, payload[p] & 0x0F
                 bits = list(payload[p + 1 : p + 17])
                 nsym = sum(bits)
+                if len(bits) < 16 or p + 17 + nsym > len(payload):
+                    raise ValueError("invalid Huffman table (DHT overruns segment)")
                 vals = list(payload[p + 17 : p + 17 + nsym])
+                # a DC symbol is the bit size of the DC difference; > 15
+                # would shift the entropy decoder's value window negative
+                if tc == 0 and any(v > 15 for v in vals):
+                    raise ValueError("invalid Huffman table (DC symbol > 15)")
                 htables[(tc, th)] = _build_lut(bits, vals)
                 p += 17 + nsym
         elif marker == 0xDD:

@@ -1916,8 +1916,9 @@ _ANN_INDEX = "vec_id % 10 <> 0"
 
 def ann_sign_matrix() -> list[list[int]]:
     """(ANN_LSH_TABLES*ANN_LSH_BITS) x RP_IN_DIM ±1 hyperplane matrix,
-    drawn once from a fixed-seed PRNG — table t owns rows
-    [t*B, (t+1)*B)."""
+    drawn once from a fixed-seed PRNG. Every sign-LSH geometry in this
+    module regroups these 48 rows: table t of a (tables, bits) family
+    owns rows [t*bits, (t+1)*bits)."""
     import random
 
     rng = random.Random(ANN_LSH_SEED)
@@ -1927,38 +1928,47 @@ def ann_sign_matrix() -> list[list[int]]:
     ]
 
 
-def _ann_bucket_mapper():
-    """mapInPandas closure: (vec_id, embedding) -> L rows (vec_id, tbl,
-    bucket). int64-scaled components, exact integer dots; bit r of table
-    t's bucket is [dot(iv, plane[t*B+r]) >= 0]."""
+def _sign_lsh_kernel(tables: int, bits: int):
+    """Driver-side factory for the integer-margin kernel shared by every
+    sign-LSH mapper: returns ``kernel(embeddings) -> (margins, buckets)``
+    where margins is N x tables x bits exact int64 dot(iv, plane) over
+    the int64-micro vectors and bucket t sets bit r iff margin[t, r] >= 0.
+    Nested (not module-level) so the mapInPandas closure pickles by value
+    and workers never import this module."""
+    import numpy as np
+
+    planes = ann_sign_matrix()
+    assert tables * bits <= len(planes), (tables, bits)
+    planes_t = np.array(planes[: tables * bits], dtype=np.int64).T
+    weights = 1 << np.arange(bits, dtype=np.int64)
+
+    def kernel(embeddings):
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in embeddings])
+        s = mat * float(_SCALE)
+        iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
+        margins = (iv @ planes_t).reshape(len(mat), tables, bits)
+        return margins, (margins >= 0).astype(np.int64) @ weights
+
+    return kernel
+
+
+def _sign_lsh_mapper(tables: int, bits: int):
+    """mapInPandas closure: (vec_id, embedding) -> ``tables`` rows of
+    (vec_id, tbl, bucket) per vector."""
     import numpy as np
     import pandas as pd
 
-    planes_t = np.array(ann_sign_matrix(), dtype=np.int64).T  # IN x (L*B)
-    weights = (1 << np.arange(ANN_LSH_BITS, dtype=np.int64))
+    kernel = _sign_lsh_kernel(tables, bits)
 
     def _buckets(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            s = mat * float(_SCALE)
-            iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
-            bits = (iv @ planes_t) >= 0  # N x (L*B) booleans
-            bkt = (
-                bits.reshape(len(pdf), ANN_LSH_TABLES, ANN_LSH_BITS)
-                .astype(np.int64)
-                @ weights
-            )  # N x L bucket ints
-            n = len(pdf)
+            _, bkt = kernel(pdf["embedding"])
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), ANN_LSH_TABLES),
-                    "tbl": np.tile(
-                        np.arange(ANN_LSH_TABLES, dtype=np.int32), n
-                    ),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), tables),
+                    "tbl": np.tile(np.arange(tables, dtype=np.int32), len(pdf)),
                     "bucket": bkt.reshape(-1),
                 }
             )
@@ -1966,12 +1976,19 @@ def _ann_bucket_mapper():
     return _buckets
 
 
-def ann_lsh_buckets(emb: DataFrame) -> DataFrame:
-    """(vec_id, tbl int, bucket long): L bucket rows per vector on the
-    seeded sign-LSH family. One Arrow-batched pass, no shuffle."""
+def sign_lsh_buckets(emb: DataFrame, tables: int, bits: int) -> DataFrame:
+    """(vec_id, tbl int, bucket long): ``tables`` bucket rows per vector on
+    the seeded sign-LSH planes regrouped as tables x bits. One
+    Arrow-batched pass, no shuffle. ``sign_lsh_sql`` is its DuckDB twin."""
     return fan_out(emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
-        _ann_bucket_mapper(), "vec_id long, tbl int, bucket long"
+        _sign_lsh_mapper(tables, bits), "vec_id long, tbl int, bucket long"
     )
+
+
+def ann_lsh_buckets(emb: DataFrame) -> DataFrame:
+    """``sign_lsh_buckets`` at the fixed ANN_LSH_TABLES x ANN_LSH_BITS
+    geometry."""
+    return sign_lsh_buckets(emb, ANN_LSH_TABLES, ANN_LSH_BITS)
 
 
 def ann_index_dir(sf_dir: str) -> str:
@@ -1988,44 +2005,56 @@ def ann_index_dir(sf_dir: str) -> str:
     return os.path.join(per_user_tmpdir("spark_graft_ann_index"), tag)
 
 
-def _ann_bucket_sql_cols() -> list[str]:
-    planes = ann_sign_matrix()
-    cols = []
-    for t in range(ANN_LSH_TABLES):
-        bits = []
-        for r in range(ANN_LSH_BITS):
-            signs = "[" + ", ".join(
-                str(s) for s in planes[t * ANN_LSH_BITS + r]
-            ) + "]"
-            bits.append(
-                "(CASE WHEN list_sum(list_transform(list_zip(iv, "
-                f"{signs}), z -> z[1] * z[2])) >= 0 THEN {1 << r} ELSE 0 END)"
-            )
-        cols.append("(" + " + ".join(bits) + f") AS b{t}")
-    return cols
-
-
-def _ann_incr_sql() -> str:
-    bucket_cols = ",\n         ".join(_ann_bucket_sql_cols())
-    banded = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sig"
-        for t in range(ANN_LSH_TABLES)
-    )
-    return f"""
-WITH scaled AS (
+# DuckDB twin of the int64-micro quantization every sign-LSH family
+# starts from: CTE ``scaled`` (vec_id, iv) over the embeddings table.
+_SCALED_SQL = f"""scaled AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(round(x::DOUBLE * {_SCALE}) AS BIGINT))
            AS iv
   FROM embeddings
-),
-sig AS (
-  SELECT vec_id, iv,
-         {bucket_cols}
-  FROM scaled
+)"""
+
+
+def _plane_dot_sql(plane: list[int]) -> str:
+    """Exact int64 margin dot(iv, plane) over a literal ±1 plane."""
+    signs = ", ".join(str(s) for s in plane)
+    return f"list_sum(list_transform(list_zip(iv, [{signs}]), z -> z[1] * z[2]))"
+
+
+def sign_lsh_sql(src: str, tables: int, bits: int) -> str:
+    """DuckDB twin of ``sign_lsh_buckets(emb, tables, bits)``: CTE text for
+    ``sig`` (vec_id, b0..b{tables-1}) over ``src``'s int64-micro vector
+    column ``iv`` and ``banded`` (vec_id, tbl, bucket), one row per vector
+    and table. Same plane literals, same 2^r bit weights."""
+    planes = ann_sign_matrix()
+    cols = ",\n         ".join(
+        "("
+        + " + ".join(
+            f"(CASE WHEN {_plane_dot_sql(planes[t * bits + r])} >= 0 "
+            f"THEN {1 << r} ELSE 0 END)"
+            for r in range(bits)
+        )
+        + f") AS b{t}"
+        for t in range(tables)
+    )
+    banded = " UNION ALL ".join(
+        f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sig"
+        for t in range(tables)
+    )
+    return f"""sig AS (
+  SELECT vec_id,
+         {cols}
+  FROM {src}
 ),
 banded AS (
   {banded}
-),
+)"""
+
+
+def _ann_incr_sql() -> str:
+    return f"""
+WITH {_SCALED_SQL},
+{sign_lsh_sql("scaled", ANN_LSH_TABLES, ANN_LSH_BITS)},
 hits AS (
   SELECT p.vec_id AS probe_id, i.vec_id AS cand_id, p.tbl
   FROM banded p JOIN banded i ON p.tbl = i.tbl AND p.bucket = i.bucket
@@ -2818,25 +2847,13 @@ def _ann_recall_sql() -> str:
     """Recall@{RA_K} oracle: PQ training prefix (vm/svm/c*/enc) + sign-LSH
     banding + exact truth, all exact-integer until the two audited
     divisions (cosine, recall)."""
-    bucket_cols = ",\n         ".join(_ann_bucket_sql_cols())
-    banded = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sig"
-        for t in range(ANN_LSH_TABLES)
-    )
     return (
         _pq_train_sql()
         + f"""
 , ived AS (
   SELECT vec_id, v AS iv FROM vm
 ),
-sig AS (
-  SELECT vec_id,
-         {bucket_cols}
-  FROM ived
-),
-banded AS (
-  {banded}
-),
+{sign_lsh_sql("ived", ANN_LSH_TABLES, ANN_LSH_BITS)},
 pn AS (
   SELECT vec_id, v, list_sum(list_transform(v, x -> x * x)) AS n2 FROM vm
 ),
@@ -3158,28 +3175,15 @@ def _ann_multiprobe_mapper():
     import numpy as np
     import pandas as pd
 
-    planes_t = np.array(ann_sign_matrix(), dtype=np.int64).T  # IN x (L*B)
-    weights = (1 << np.arange(ANN_LSH_BITS, dtype=np.int64))
+    kernel = _sign_lsh_kernel(ANN_LSH_TABLES, ANN_LSH_BITS)
 
     def _buckets(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            s = mat * float(_SCALE)
-            iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
-            dots = iv @ planes_t  # N x (L*B) exact int64 margins
-            bits = dots >= 0
             n = len(pdf)
-            bkt = (
-                bits.reshape(n, ANN_LSH_TABLES, ANN_LSH_BITS).astype(np.int64)
-                @ weights
-            )  # N x L
-            amin = np.abs(dots).reshape(n, ANN_LSH_TABLES, ANN_LSH_BITS).argmin(
-                axis=2
-            )  # N x L: weakest bit per table
+            margins, bkt = kernel(pdf["embedding"])  # N x L x B, N x L
+            amin = np.abs(margins).argmin(axis=2)  # N x L: weakest bit per table
             bkt_flip = bkt ^ (np.int64(1) << amin)
             ids = np.repeat(pdf["vec_id"].to_numpy(), ANN_LSH_TABLES)
             tbls = np.tile(np.arange(ANN_LSH_TABLES, dtype=np.int32), n)
@@ -3205,73 +3209,41 @@ def _ann_mp_sql() -> str:
     weakest-bit flip with CASE-order ties, both probe variants vs the
     single-bucket index, exact-cosine rerank, recall vs exact truth."""
     planes = ann_sign_matrix()
-
-    def dot_expr(t: int, r: int) -> str:
-        signs = "[" + ", ".join(
-            str(s) for s in planes[t * ANN_LSH_BITS + r]
-        ) + "]"
-        return (
-            "list_sum(list_transform(list_zip(iv, "
-            f"{signs}), z -> z[1] * z[2]))"
-        )
-
+    tables, bits = ANN_LSH_TABLES, ANN_LSH_BITS
     dot_cols = ",\n         ".join(
-        f"{dot_expr(t, r)} AS d{t}_{r}"
-        for t in range(ANN_LSH_TABLES)
-        for r in range(ANN_LSH_BITS)
+        f"{_plane_dot_sql(planes[t * bits + r])} AS d{t}_{r}"
+        for t in range(tables)
+        for r in range(bits)
     )
-    bucket_cols = []
-    flip_cols = []
-    for t in range(ANN_LSH_TABLES):
-        bucket_cols.append(
-            "("
-            + " + ".join(
-                f"(CASE WHEN d{t}_{r} >= 0 THEN {1 << r} ELSE 0 END)"
-                for r in range(ANN_LSH_BITS)
-            )
-            + f") AS b{t}"
+    # fl[t + 1] = table t's weakest bit: the first r whose |margin| is least
+    flip_cols = ", ".join(
+        "(CASE "
+        + " ".join(
+            f"WHEN abs(d{t}_{r}) = LEAST("
+            + ", ".join(f"abs(d{t}_{q})" for q in range(bits))
+            + f") THEN {r}"
+            for r in range(bits)
         )
-        m = "LEAST(" + ", ".join(
-            f"abs(d{t}_{r})" for r in range(ANN_LSH_BITS)
-        ) + ")"
-        flip_cols.append(
-            "(CASE "
-            + " ".join(
-                f"WHEN abs(d{t}_{r}) = {m} THEN {r}"
-                for r in range(ANN_LSH_BITS)
-            )
-            + f" END) AS f{t}"
-        )
-    single = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM sigm"
-        for t in range(ANN_LSH_TABLES)
-    )
-    flipped = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, xor(b{t}, 1 << f{t}) AS bucket FROM sigm"
-        for t in range(ANN_LSH_TABLES)
+        + " END)"
+        for t in range(tables)
     )
     return f"""
-WITH ived AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(x::DOUBLE * {_SCALE}) AS BIGINT))
-           AS iv
-  FROM embeddings
-),
+WITH {_SCALED_SQL},
+{sign_lsh_sql("scaled", tables, bits)},
 dots AS (
-  SELECT vec_id, iv,
-         {dot_cols}
-  FROM ived
-),
-sigm AS (
   SELECT vec_id,
-         {", ".join(bucket_cols)},
-         {", ".join(flip_cols)}
-  FROM dots
+         {dot_cols}
+  FROM scaled
 ),
-banded0 AS ({single}),
-banded1 AS ({flipped}),
+flips AS (
+  SELECT vec_id, [{flip_cols}] AS fl FROM dots
+),
+banded1 AS (
+  SELECT b.vec_id, b.tbl, xor(b.bucket, 1 << f.fl[b.tbl + 1]) AS bucket
+  FROM banded b JOIN flips f ON f.vec_id = b.vec_id
+),
 pn AS (
-  SELECT vec_id, iv, list_sum(list_transform(iv, x -> x * x)) AS n2 FROM ived
+  SELECT vec_id, iv, list_sum(list_transform(iv, x -> x * x)) AS n2 FROM scaled
 ),
 rpairs AS (
   SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
@@ -3293,13 +3265,13 @@ tcos AS (
 ),
 hits_s AS (
   SELECT DISTINCT p.vec_id AS probe_id, i.vec_id AS cand_id
-  FROM banded0 p JOIN banded0 i ON p.tbl = i.tbl AND p.bucket = i.bucket
+  FROM banded p JOIN banded i ON p.tbl = i.tbl AND p.bucket = i.bucket
   WHERE {_ra_probe_pred('p.')} AND i.{_ANN_INDEX}
 ),
 hits_m AS (
   SELECT DISTINCT p.vec_id AS probe_id, i.vec_id AS cand_id
-  FROM (SELECT * FROM banded0 UNION ALL SELECT * FROM banded1) p
-  JOIN banded0 i ON p.tbl = i.tbl AND p.bucket = i.bucket
+  FROM (SELECT * FROM banded UNION ALL SELECT * FROM banded1) p
+  JOIN banded i ON p.tbl = i.tbl AND p.bucket = i.bucket
   WHERE {_ra_probe_pred('p.')} AND i.{_ANN_INDEX}
 ),
 plist AS (
@@ -3853,69 +3825,7 @@ GEO_BITS_MAX = 12
 GEO_LADDER = (6, 8, 10, 12)
 
 
-def _geo_bucket_mapper():
-    """mapInPandas closure: (vec_id, embedding) -> GEO_TABLES rows of
-    (vec_id, tbl, bucket) at max resolution (12 bits). Same seeded plane
-    matrix as the incremental-ANN family (ann_sign_matrix's 48 rows),
-    regrouped so table t owns plane rows [t*12, (t+1)*12)."""
-    import numpy as np
-    import pandas as pd
-
-    planes_t = np.array(ann_sign_matrix(), dtype=np.int64).T  # IN x 48
-    weights = 1 << np.arange(GEO_BITS_MAX, dtype=np.int64)
-
-    def _buckets(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            s = mat * float(_SCALE)
-            iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
-            bits = (iv @ planes_t) >= 0  # N x (GEO_TABLES*GEO_BITS_MAX)
-            bkt = (
-                bits.reshape(len(pdf), GEO_TABLES, GEO_BITS_MAX)
-                .astype(np.int64)
-                @ weights
-            )
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), GEO_TABLES),
-                    "tbl": np.tile(np.arange(GEO_TABLES, dtype=np.int32), n),
-                    "bucket": bkt.reshape(-1),
-                }
-            )
-
-    return _buckets
-
-
-def _geo_bucket_sql_cols() -> list[str]:
-    """DuckDB twins of the 12-bit buckets: same plane literals, same
-    2^r bit weights, table t = plane rows [t*12, (t+1)*12)."""
-    planes = ann_sign_matrix()
-    cols = []
-    for t in range(GEO_TABLES):
-        bits = []
-        for r in range(GEO_BITS_MAX):
-            signs = "[" + ", ".join(
-                str(s) for s in planes[t * GEO_BITS_MAX + r]
-            ) + "]"
-            bits.append(
-                "(CASE WHEN list_sum(list_transform(list_zip(iv, "
-                f"{signs}), z -> z[1] * z[2])) >= 0 THEN {1 << r} ELSE 0 END)"
-            )
-        cols.append("(" + " + ".join(bits) + f") AS g{t}")
-    return cols
-
-
 def _geo_audit_sql() -> str:
-    bucket_cols = ",\n         ".join(_geo_bucket_sql_cols())
-    banded = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, g{t} AS bucket FROM sig"
-        for t in range(GEO_TABLES)
-    )
     per_geo = "\nUNION ALL\n".join(
         f"""SELECT {b} AS bits,
        CAST(count(DISTINCT p.vec_id) AS BIGINT) AS n_probes_colliding,
@@ -3928,19 +3838,8 @@ WHERE p.{_ANN_PROBE} AND i.{_ANN_INDEX}"""
         for b in GEO_LADDER
     )
     return f"""
-WITH scaled AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(x::DOUBLE * {_SCALE}) AS BIGINT))
-           AS iv
-  FROM embeddings
-),
-sig AS (
-  SELECT vec_id, {bucket_cols}
-  FROM scaled
-),
-banded AS (
-  {banded}
-)
+WITH {_SCALED_SQL},
+{sign_lsh_sql("scaled", GEO_TABLES, GEO_BITS_MAX)}
 {per_geo}
 """
 
@@ -3979,11 +3878,7 @@ def ann_geometry_scaling_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketBy-written signature table exactly like the incremental probe.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    banded = checkpoint_pinned(
-        fan_out(emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
-            _geo_bucket_mapper(), "vec_id long, tbl int, bucket long"
-        )
-    )
+    banded = checkpoint_pinned(sign_lsh_buckets(emb, GEO_TABLES, GEO_BITS_MAX))
     probe = banded.filter(F.expr(_ANN_PROBE)).select(
         F.col("vec_id").alias("probe_id"), "tbl", "bucket"
     )
@@ -4034,50 +3929,10 @@ ADX_BITS_MIN = 4
 ADX_TARGET_CANDIDATES = 64
 
 
-def _adx_bucket_mapper():
-    """mapInPandas closure: (vec_id, embedding) -> ADX_TABLES rows of
-    (vec_id, tbl, bucket) at max resolution (16 bits). Same seeded ±1
-    plane matrix as the whole incremental-ANN family (ann_sign_matrix's
-    48 rows), regrouped so table t owns plane rows [t*16, (t+1)*16)."""
-    import numpy as np
-    import pandas as pd
-
-    planes_t = np.array(ann_sign_matrix(), dtype=np.int64).T  # IN x 48
-    weights = 1 << np.arange(ADX_BITS_MAX, dtype=np.int64)
-
-    def _buckets(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            s = mat * float(_SCALE)
-            iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
-            bits = (iv @ planes_t) >= 0  # N x (ADX_TABLES*ADX_BITS_MAX)
-            bkt = (
-                bits.reshape(len(pdf), ADX_TABLES, ADX_BITS_MAX)
-                .astype(np.int64)
-                @ weights
-            )
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), ADX_TABLES),
-                    "tbl": np.tile(np.arange(ADX_TABLES, dtype=np.int32), n),
-                    "bucket": bkt.reshape(-1),
-                }
-            )
-
-    return _buckets
-
-
 def adx_lsh_buckets(emb: DataFrame) -> DataFrame:
-    """(vec_id, tbl int, bucket long): ADX_TABLES max-resolution bucket
-    rows per vector. One Arrow-batched pass, no shuffle."""
-    return fan_out(emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
-        _adx_bucket_mapper(), "vec_id long, tbl int, bucket long"
-    )
+    """``sign_lsh_buckets`` at the persisted max resolution, ADX_TABLES x
+    ADX_BITS_MAX."""
+    return sign_lsh_buckets(emb, ADX_TABLES, ADX_BITS_MAX)
 
 
 def adx_index_dir(sf_dir: str) -> str:
@@ -4221,46 +4076,10 @@ def ann_adaptive_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _adx_bucket_sql_cols() -> list[str]:
-    """DuckDB twins of the 16-bit buckets: same plane literals, same 2^r
-    bit weights, table t = plane rows [t*16, (t+1)*16)."""
-    planes = ann_sign_matrix()
-    cols = []
-    for t in range(ADX_TABLES):
-        bits = []
-        for r in range(ADX_BITS_MAX):
-            signs = "[" + ", ".join(
-                str(s) for s in planes[t * ADX_BITS_MAX + r]
-            ) + "]"
-            bits.append(
-                "(CASE WHEN list_sum(list_transform(list_zip(iv, "
-                f"{signs}), z -> z[1] * z[2])) >= 0 THEN {1 << r} ELSE 0 END)"
-            )
-        cols.append("(" + " + ".join(bits) + f") AS x{t}")
-    return cols
-
-
 def _adx_sql() -> str:
-    bucket_cols = ",\n         ".join(_adx_bucket_sql_cols())
-    banded = " UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, x{t} AS bucket FROM sig"
-        for t in range(ADX_TABLES)
-    )
     return f"""
-WITH scaled AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(x::DOUBLE * {_SCALE}) AS BIGINT))
-           AS iv
-  FROM embeddings
-),
-sig AS (
-  SELECT vec_id, iv,
-         {bucket_cols}
-  FROM scaled
-),
-banded AS (
-  {banded}
-),
+WITH {_SCALED_SQL},
+{sign_lsh_sql("scaled", ADX_TABLES, ADX_BITS_MAX)},
 nl AS (
   SELECT CAST(count(*) AS BIGINT) AS nl FROM banded WHERE {_ANN_INDEX}
 ),

@@ -488,6 +488,28 @@ def write_stream_idempotent(stream: DataFrame, out_dir: str, checkpoint: str):
     )
 
 
+def _start_foreach_batch(
+    source: DataFrame, fn, checkpoint: str, available_now: bool
+):
+    """Start ``fn`` as the foreachBatch sink of ``source`` — the one starter
+    behind every ``*_stream`` maintainer below; the checkpoint carries the
+    source offsets and so the batch-id sequence across restarts.
+
+    ``available_now=True`` is the operational BACKFILL shape
+    (Trigger.AvailableNow): drain everything currently in the input dir,
+    then terminate — a later start with the same checkpoint tails only
+    files the backfill didn't consume. This is how a maintainer is
+    (re)started in production: catch up the backlog, exit, run live."""
+    writer = (
+        source.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 # ---------------------------------------------------------------------------
 # transformWithStateInPandas (Spark 4 arbitrary-stateful API) — round 6
 # ---------------------------------------------------------------------------
@@ -904,23 +926,14 @@ def hll_state_stream(
 ):
     """Start the incremental HLL state maintenance stream: event files →
     per-batch register build → idempotent register-max merge into the
-    persisted state table (checkpoint carries the source offsets).
-
-    ``available_now=True`` is the operational BACKFILL shape
-    (Trigger.AvailableNow): drain everything currently in ``input_dir``
-    into the state table, then terminate — a later start with the same
-    checkpoint tails only files the backfill didn't consume. This is how
-    the maintainer is (re)started in production: catch up the backlog,
-    exit, run live."""
-    writer = (
-        read_event_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_hll_state_merger(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    persisted state table. ``available_now=True``: backfill shape (see
+    ``_start_foreach_batch``)."""
+    return _start_foreach_batch(
+        read_event_stream(spark, input_dir),
+        make_hll_state_merger(state_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -932,15 +945,11 @@ def hll_state_stream(
 HIST_APPLIED_FILE = "_applied_batches.json"
 
 
-def make_hist_state_merger(state_dir: str):
-    """``foreachBatch`` function that folds each micro-batch's per-day
-    histogram bin counts into a persisted (day, bin, cnt) parquet state
-    table — the streaming form of
-    ``sketches.histogram_incremental_daily``'s state build, and the
-    DELIBERATE CONTRAST to ``make_hll_state_merger``: bin-count SUM is
-    associative and commutative but NOT idempotent (sum(a, a) = 2a), so
-    at-least-once foreachBatch replay WOULD double-count. Exactly-once
-    therefore needs batch_id bookkeeping: the set of applied batch ids is
+def _ledgered_state_merger(state_dir: str, fold):
+    """``foreachBatch`` function for a NON-idempotent state fold — one
+    ``fold(batch_df, cur)`` returns the new state table from the batch and
+    the current table (``cur`` is None before the first batch) — made
+    exactly-once by batch_id bookkeeping: the set of applied batch ids is
     a JSON ledger stored INSIDE the state table dir (underscore-prefixed,
     so Spark's reader ignores it), and a batch already in the ledger is
     skipped wholesale. Because ledger and table live in one directory,
@@ -952,21 +961,12 @@ def make_hist_state_merger(state_dir: str):
     counts as COMPLETE only when BOTH the parquet ``_SUCCESS`` marker and
     the ledger file exist — the ledger is written LAST, so a staging that
     died between parquet write and ledger write is never promoted (it
-    holds the batch's counts but doesn't record them; promoting it would
-    double-count on redelivery — exactly the failure the marker ordering
-    prevents).
-
-    Scale: per-batch work is one map-side-combinable (day, bin) aggregate
-    over the batch plus a merge against a table bounded by days × bins —
-    KBs; the ledger grows by one integer per batch (a production table
-    format's commit log subsumes both). Raw events are never re-read.
-    """
+    holds the batch's fold but doesn't record it; promoting it would
+    double-apply on redelivery — exactly the failure the marker ordering
+    prevents). The ledger grows by one integer per batch (a production
+    table format's commit log subsumes it)."""
     import json
     import os
-
-    from big_data_medical_analysis_spark.operators.sketches import (
-        daily_value_histogram,
-    )
 
     cur_dir = os.path.join(state_dir, "current")
 
@@ -976,7 +976,6 @@ def make_hist_state_merger(state_dir: str):
         ) and os.path.exists(os.path.join(staging, HIST_APPLIED_FILE))
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         _recover_state_swap(state_dir, cur_dir, _complete)
         applied: list[int] = []
         ledger = os.path.join(cur_dir, HIST_APPLIED_FILE)
@@ -985,21 +984,51 @@ def make_hist_state_merger(state_dir: str):
                 applied = json.load(f)
         if batch_id in applied:
             return  # redelivered batch: already folded in, skip wholesale
-        new = daily_value_histogram(batch_df)
-        if os.path.exists(cur_dir):
-            cur = spark.read.parquet(cur_dir).select("day", "bin", "cnt")
-            new = (
-                cur.unionByName(new)
-                .groupBy("day", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
+        cur = (
+            batch_df.sparkSession.read.parquet(cur_dir)
+            if os.path.exists(cur_dir)
+            else None
+        )
         staging = os.path.join(state_dir, f"staging_{batch_id}")
-        new.write.mode("overwrite").parquet(staging)
+        fold(batch_df, cur).write.mode("overwrite").parquet(staging)
         with open(os.path.join(staging, HIST_APPLIED_FILE), "w") as f:
             json.dump(sorted(set(applied) | {batch_id}), f)
         _commit_state_swap(state_dir, cur_dir, staging, batch_id)
 
     return _merge
+
+
+def make_hist_state_merger(state_dir: str):
+    """``foreachBatch`` function that folds each micro-batch's per-day
+    histogram bin counts into a persisted (day, bin, cnt) parquet state
+    table — the streaming form of
+    ``sketches.histogram_incremental_daily``'s state build, and the
+    DELIBERATE CONTRAST to ``make_hll_state_merger``: bin-count SUM is
+    associative and commutative but NOT idempotent (sum(a, a) = 2a), so
+    at-least-once foreachBatch replay WOULD double-count. Exactly-once
+    therefore goes through the applied-batch ledger of
+    ``_ledgered_state_merger``.
+
+    Scale: per-batch work is one map-side-combinable (day, bin) aggregate
+    over the batch plus a merge against a table bounded by days × bins —
+    KBs. Raw events are never re-read.
+    """
+    from big_data_medical_analysis_spark.operators.sketches import (
+        daily_value_histogram,
+    )
+
+    def _fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
+        new = daily_value_histogram(batch_df)
+        if cur is None:
+            return new
+        return (
+            cur.select("day", "bin", "cnt")
+            .unionByName(new)
+            .groupBy("day", "bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+
+    return _ledgered_state_merger(state_dir, _fold)
 
 
 def hist_state_stream(
@@ -1014,20 +1043,17 @@ def hist_state_stream(
     merge into the persisted state table (checkpoint carries the source
     offsets; the ledger carries the applied batch ids).
 
-    ``available_now=True``: backfill shape (see ``hll_state_stream``).
+    ``available_now=True``: backfill shape (see ``_start_foreach_batch``).
     The ledger spans the backfill/live boundary unchanged — batch ids
     keep incrementing across restarts because they come from the shared
     checkpoint, so a live redelivery of a backfill batch is still
     skipped by the same ledger lookup."""
-    writer = (
-        read_event_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_hist_state_merger(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        read_event_stream(spark, input_dir),
+        make_hist_state_merger(state_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1050,92 +1076,111 @@ def read_docs_stream(
     )
 
 
-def make_pmh_index_appender(index_dir: str, matches_dir: str):
-    """``foreachBatch`` function closing the loop
-    ``minhash_incremental_probe`` documents: each ingest batch PROBES the
-    persisted band index for duplicate candidates, then APPENDS its own
-    band rows — so the same table serves as index and accumulating state
-    and the NEXT batch dedups against everything before it.
+def _has_prior(dirpath: str, batch_id: int) -> bool:
+    """Whether ``dirpath`` holds an ``ingest_batch=<id>`` partition from a
+    batch before ``batch_id`` (the replay-safe "not the first batch" test:
+    a replayed first batch must take the first-batch path again)."""
+    import os
+
+    return any(
+        e.startswith("ingest_batch=") and int(e.split("=", 1)[1]) < batch_id
+        for e in (os.listdir(dirpath) if os.path.isdir(dirpath) else [])
+    )
+
+
+def _probe_then_append(
+    index_dir: str, matches_dir: str, bucketer, key: str, part: str, probe
+):
+    """``foreachBatch`` maintainer shared by every persisted bucket index:
+    each ingest batch buckets itself once (``bucketer(batch_df)`` ->
+    (``key``, ``part``, bucket) rows), PROBES the accumulated index for
+    candidates, then APPENDS its own bucket rows — so the same table
+    serves as index and accumulating state, and the NEXT batch probes
+    against everything before it. ``probe(banded, index)`` is the
+    family's probe aggregation over the batch's rows and the prior index
+    rows (the index key renamed to ``cand_id``, ``part`` cast to int on
+    both sides); before the first append it sees an empty index.
 
     Exactly-once on BOTH outputs without a ledger, because both are
     per-batch overwrites keyed by batch_id (the
-    ``make_idempotent_batch_writer`` recipe): the batch's band rows land
-    in ``ingest_batch=<id>`` (sub-partitioned by band, so probes still
-    prune to one band directory per band), and its probe hits land in
-    ``batch_id=<id>`` under ``matches_dir``. Structured Streaming replays
-    a failed batch with the same (data, batch_id); each overwrite then
-    replaces its own partial output — no double-appended index rows, no
-    duplicated match rows. The probe read never sees half its OWN batch:
-    it runs before the append, against only prior batches' committed
-    directories.
+    ``make_idempotent_batch_writer`` recipe): the batch's rows land in
+    ``ingest_batch=<id>`` under ``index_dir`` (sub-partitioned by
+    ``part``, so probes prune to one directory per table/band), and its
+    probe hits land in ``batch_id=<id>`` under ``matches_dir``.
+    Structured Streaming replays a failed batch with the same
+    (data, batch_id); each overwrite then replaces its own partial output
+    — no double-appended index rows, no duplicated match rows. The probe
+    runs before the append, so it never sees half its OWN batch.
 
     The probe reads only ``ingest_batch < batch_id`` partitions: a
     REPLAYED batch whose index append already committed would otherwise
-    probe its own rows (every doc self-matches) and write a different
+    probe its own rows (every row self-matches) and write a different
     matches file than the first attempt — partition-pruned replay
-    determinism, caught by the redelivery pytest.
+    determinism, caught by the redelivery pytests. The batch's rows are
+    persisted for the probe and the append and unpersisted after.
 
-    Batch-boundary semantics (same as the batch twin): probe-vs-index
-    misses duplicates WITHIN the ingest batch; a batch-local self-dedup
+    Batch-boundary semantics (same as the batch twins): probe-vs-index
+    misses collisions WITHIN the ingest batch; a batch-local self-probe
     (batch-sized cost) runs beside it in production. Scale: per-batch
-    cost is O(batch × bands) banding + a (band, bucket) equi-join against
-    a band-pruned index read — the accumulated corpus is never re-banded.
+    cost is O(batch × tables) bucketing + an equi-join against a
+    partition-pruned index read — the accumulated corpus is never
+    re-bucketed.
     """
     import os
 
-    from big_data_medical_analysis_spark.operators.dedup import (
-        pmh_banded_buckets,
-    )
-
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        banded = pmh_banded_buckets(batch_df).persist()
+        banded = bucketer(batch_df).persist()
         try:
-            prior = [
-                e
-                for e in (
-                    os.listdir(index_dir) if os.path.isdir(index_dir) else []
-                )
-                if e.startswith("ingest_batch=")
-                and int(e.split("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("ingest_batch") < batch_id)
-                    .select(
-                        F.col("doc_id").alias("index_doc_id"),
-                        F.col("band").cast("int").alias("band"),
-                        "bucket",
-                    )
-                )
-                hits = (
-                    banded.withColumn("band", F.col("band").cast("int"))
-                    .join(index, ["band", "bucket"])
-                    .groupBy("doc_id")
-                    .agg(
-                        F.countDistinct("index_doc_id").alias(
-                            "n_index_matches"
-                        ),
-                        F.min("index_doc_id").alias("min_index_doc"),
-                    )
+            if _has_prior(index_dir, batch_id):
+                index = spark.read.parquet(index_dir).filter(
+                    F.col("ingest_batch") < batch_id
                 )
             else:
-                hits = banded.select("doc_id").limit(0).select(
-                    "doc_id",
-                    F.lit(0).cast("long").alias("n_index_matches"),
-                    F.lit(None).cast("long").alias("min_index_doc"),
-                )
+                index = banded.limit(0)  # optimizes to an empty relation
+            hits = probe(
+                banded.withColumn(part, F.col(part).cast("int")),
+                index.select(
+                    F.col(key).alias("cand_id"),
+                    F.col(part).cast("int").alias(part),
+                    "bucket",
+                ),
+            )
             hits.write.mode("overwrite").parquet(
                 os.path.join(matches_dir, f"batch_id={batch_id}")
             )
-            banded.write.mode("overwrite").partitionBy("band").parquet(
+            banded.write.mode("overwrite").partitionBy(part).parquet(
                 os.path.join(index_dir, f"ingest_batch={batch_id}")
             )
         finally:
             banded.unpersist()
 
     return _merge
+
+
+def make_pmh_index_appender(index_dir: str, matches_dir: str):
+    """``_probe_then_append`` over the MinHash band index, closing the loop
+    ``minhash_incremental_probe`` documents. Bucketer:
+    ``pmh_banded_buckets`` (doc_id, band, bucket). Probe: per batch doc,
+    the distinct index docs sharing any (band, bucket) and the smallest
+    of them (n_index_matches, min_index_doc)."""
+    from big_data_medical_analysis_spark.operators.dedup import (
+        pmh_banded_buckets,
+    )
+
+    def _probe(banded: DataFrame, index: DataFrame) -> DataFrame:
+        return (
+            banded.join(index, ["band", "bucket"])
+            .groupBy("doc_id")
+            .agg(
+                F.countDistinct("cand_id").alias("n_index_matches"),
+                F.min("cand_id").alias("min_index_doc"),
+            )
+        )
+
+    return _probe_then_append(
+        index_dir, matches_dir, pmh_banded_buckets, "doc_id", "band", _probe
+    )
 
 
 def pmh_index_stream(
@@ -1149,18 +1194,13 @@ def pmh_index_stream(
     """Start the incremental MinHash-index ingest stream: document files →
     per-batch probe against the accumulated band index → idempotent
     append of the batch's own band rows. ``available_now=True`` is the
-    backfill shape (see ``hll_state_stream``)."""
-    writer = (
-        read_docs_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            make_pmh_index_appender(index_dir, matches_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    backfill shape (see ``_start_foreach_batch``)."""
+    return _start_foreach_batch(
+        read_docs_stream(spark, input_dir),
+        make_pmh_index_appender(index_dir, matches_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1183,79 +1223,34 @@ def read_embeddings_stream(
     )
 
 
+def _lsh_hit_stats(grouped) -> DataFrame:
+    """Per-probe sign-LSH candidate stats: tables hit, distinct candidates
+    and the smallest candidate (the exact-cosine rerank happens downstream
+    against the vector store by key join, exactly as in the batch twins)."""
+    return grouped.agg(
+        F.countDistinct("tbl").alias("n_tables_hit"),
+        F.countDistinct("cand_id").alias("n_candidates"),
+        F.min("cand_id").alias("min_cand"),
+    )
+
+
 def make_ann_index_appender(index_dir: str, matches_dir: str):
-    """``foreachBatch`` twin of ``make_pmh_index_appender`` for the
-    similarity pillar, closing the loop ``ann_incremental_probe``
-    documents: each embedding batch buckets itself on the seeded sign-LSH
-    family (one Arrow matmul pass), PROBES the accumulated (tbl, bucket)
-    index for collision candidates, then APPENDS its own bucket rows.
-    Same exactly-once/replay discipline: both outputs are per-batch
-    overwrites keyed by batch_id, and the probe reads only
-    ``ingest_batch < batch_id`` partitions so a replayed batch whose
-    append already committed never self-matches. Candidates carry
-    (n_tables_hit, n_candidates, min_cand) per probing vector — the
-    rerank-by-exact-cosine step happens downstream against the vector
-    store by key join, exactly as in the batch twin.
-
-    Scale: per-batch cost is O(batch × L) bucketing + a bucket equi-join
-    that prunes to matching (tbl, bucket) partitions; the corpus is
-    never re-bucketed. At 100 TB the index table is additionally
-    bucketBy(bucket) so probes co-locate."""
-    import os
-
+    """``_probe_then_append`` over the fixed-geometry sign-LSH index,
+    closing the loop ``ann_incremental_probe`` documents. Bucketer:
+    ``ann_lsh_buckets`` (one Arrow matmul pass). Probe: a (tbl, bucket)
+    equi-join, then ``_lsh_hit_stats`` per probing vector."""
     from big_data_medical_analysis_spark.operators.similarity import (
         ann_lsh_buckets,
     )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        banded = ann_lsh_buckets(batch_df).persist()
-        try:
-            prior = [
-                e
-                for e in (
-                    os.listdir(index_dir) if os.path.isdir(index_dir) else []
-                )
-                if e.startswith("ingest_batch=")
-                and int(e.split("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("ingest_batch") < batch_id)
-                    .select(
-                        F.col("vec_id").alias("cand_id"),
-                        F.col("tbl").cast("int").alias("tbl"),
-                        "bucket",
-                    )
-                )
-                hits = (
-                    banded.withColumn("tbl", F.col("tbl").cast("int"))
-                    .join(index, ["tbl", "bucket"])
-                    .groupBy("vec_id")
-                    .agg(
-                        F.countDistinct("tbl").alias("n_tables_hit"),
-                        F.countDistinct("cand_id").alias("n_candidates"),
-                        F.min("cand_id").alias("min_cand"),
-                    )
-                )
-            else:
-                hits = banded.select("vec_id").limit(0).select(
-                    "vec_id",
-                    F.lit(0).cast("long").alias("n_tables_hit"),
-                    F.lit(0).cast("long").alias("n_candidates"),
-                    F.lit(None).cast("long").alias("min_cand"),
-                )
-            hits.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch_id={batch_id}")
-            )
-            banded.write.mode("overwrite").partitionBy("tbl").parquet(
-                os.path.join(index_dir, f"ingest_batch={batch_id}")
-            )
-        finally:
-            banded.unpersist()
+    def _probe(banded: DataFrame, index: DataFrame) -> DataFrame:
+        return _lsh_hit_stats(
+            banded.join(index, ["tbl", "bucket"]).groupBy("vec_id")
+        )
 
-    return _merge
+    return _probe_then_append(
+        index_dir, matches_dir, ann_lsh_buckets, "vec_id", "tbl", _probe
+    )
 
 
 def ann_index_stream(
@@ -1269,17 +1264,12 @@ def ann_index_stream(
     """Start the incremental sign-LSH index ingest stream (see
     ``make_ann_index_appender``); ``available_now=True`` is the backfill
     shape."""
-    writer = (
-        read_embeddings_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            make_ann_index_appender(index_dir, matches_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        read_embeddings_stream(spark, input_dir),
+        make_ann_index_appender(index_dir, matches_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1289,107 +1279,45 @@ def ann_index_stream(
 
 
 def make_adx_index_appender(index_dir: str, matches_dir: str):
-    """``foreachBatch`` maintainer for the geometry-ADAPTIVE ANN index
-    (VERDICT r13 task 5) — the ``ann_adaptive_probe`` serving path's
-    incremental loop, mirroring ``make_ann_index_appender`` with the one
-    production-critical difference: the serving geometry is NOT fixed.
+    """``_probe_then_append`` over the geometry-ADAPTIVE ANN index — the
+    ``ann_adaptive_probe`` serving path's incremental loop, where the
+    serving geometry is NOT fixed. Bucketer: ``adx_lsh_buckets`` at max
+    resolution (ADX_TABLES x ADX_BITS_MAX bits — the only resolution ever
+    persisted).
 
-    Each embedding batch bands itself ONCE at max resolution
-    (``adx_lsh_buckets``: ADX_TABLES x ADX_BITS_MAX bits — the only
-    resolution ever persisted), PROBES the accumulated index at
-    serve_bits RE-DERIVED from that index's exact row count
-    (``_adx_serve_bits``, the same 1-row broadcast ladder the batch
-    query uses), masks BOTH sides to the derived geometry
-    (bucket % 2^serve_bits — bit r carries weight 2^r, so a re-tune is
-    integer masking, never a re-band), equi-joins on (tbl, masked
-    bucket), then APPENDS its own max-resolution rows. As the index
-    grows across batches the derived serve_bits DEEPENS mid-stream —
-    the boundary crossing is observable in the matches output (each
-    batch's rows carry the geometry they were served at), and a clamp
-    at ADX_BITS_MAX with candidates > target is the operational
-    re-band signal, exactly as the batch query's docstring promises.
-
-    Exactly-once/replay discipline is the pmh recipe verbatim: both
-    outputs are per-batch ``mode=overwrite`` directories keyed by
-    batch_id, and the probe reads only ``ingest_batch < batch_id``
-    partitions, so a REPLAYED batch whose append already committed
-    derives the SAME serve_bits from the SAME prior rows (never its
-    own) and rewrites identical outputs. Scale: per-batch cost is
-    O(batch x L) banding + the masked equi-join whose expected
-    candidates per probe stay <= ADX_TARGET_CANDIDATES by the
-    serve-bits rule — probe work tracks the batch, flat in the index.
-    """
-    import os
-
+    Probe: serve_bits is RE-DERIVED from the prior index's exact row
+    count (``_adx_serve_bits``, the same 1-row broadcast ladder the batch
+    query uses), BOTH sides are masked to it (bucket % 2^serve_bits — bit
+    r carries weight 2^r, so a re-tune is integer masking, never a
+    re-band), then a (tbl, masked bucket) equi-join feeds
+    ``_lsh_hit_stats`` per (vector, serve_bits). As the index grows the
+    derived serve_bits DEEPENS mid-stream — each batch's match rows carry
+    the geometry they were served at, and a clamp at ADX_BITS_MAX with
+    candidates > target is the operational re-band signal. A replayed
+    batch derives the SAME serve_bits from the SAME prior rows (never its
+    own). Expected candidates per probe stay <= ADX_TARGET_CANDIDATES, so
+    probe work tracks the batch, flat in the index."""
     from big_data_medical_analysis_spark.operators.similarity import (
         _adx_serve_bits,
         adx_lsh_buckets,
     )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        banded = adx_lsh_buckets(batch_df).persist()
-        try:
-            prior = [
-                e
-                for e in (
-                    os.listdir(index_dir) if os.path.isdir(index_dir) else []
-                )
-                if e.startswith("ingest_batch=")
-                and int(e.split("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("ingest_batch") < batch_id)
-                    .select(
-                        F.col("vec_id").alias("cand_id"),
-                        F.col("tbl").cast("int").alias("tbl"),
-                        "bucket",
-                    )
-                )
-                serve = _adx_serve_bits(index)
-                mask = F.expr("shiftleft(CAST(1 AS BIGINT), serve_bits)")
-                p = (
-                    banded.withColumn("tbl", F.col("tbl").cast("int"))
-                    .crossJoin(F.broadcast(serve))
-                    .select(
-                        "vec_id",
-                        "tbl",
-                        "serve_bits",
-                        (F.col("bucket") % mask).alias("mb"),
-                    )
-                )
-                i = index.crossJoin(F.broadcast(serve)).select(
-                    "cand_id", "tbl", (F.col("bucket") % mask).alias("mb")
-                )
-                hits = (
-                    p.join(i, ["tbl", "mb"])
-                    .groupBy("vec_id", "serve_bits")
-                    .agg(
-                        F.countDistinct("tbl").alias("n_tables_hit"),
-                        F.countDistinct("cand_id").alias("n_candidates"),
-                        F.min("cand_id").alias("min_cand"),
-                    )
-                )
-            else:
-                hits = banded.select("vec_id").limit(0).select(
-                    "vec_id",
-                    F.lit(0).cast("int").alias("serve_bits"),
-                    F.lit(0).cast("long").alias("n_tables_hit"),
-                    F.lit(0).cast("long").alias("n_candidates"),
-                    F.lit(None).cast("long").alias("min_cand"),
-                )
-            hits.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch_id={batch_id}")
-            )
-            banded.write.mode("overwrite").partitionBy("tbl").parquet(
-                os.path.join(index_dir, f"ingest_batch={batch_id}")
-            )
-        finally:
-            banded.unpersist()
+    def _probe(banded: DataFrame, index: DataFrame) -> DataFrame:
+        serve = F.broadcast(_adx_serve_bits(index))
+        mask = F.expr("shiftleft(CAST(1 AS BIGINT), serve_bits)")
+        p = banded.crossJoin(serve).select(
+            "vec_id", "tbl", "serve_bits", (F.col("bucket") % mask).alias("mb")
+        )
+        i = index.crossJoin(serve).select(
+            "cand_id", "tbl", (F.col("bucket") % mask).alias("mb")
+        )
+        return _lsh_hit_stats(
+            p.join(i, ["tbl", "mb"]).groupBy("vec_id", "serve_bits")
+        )
 
-    return _merge
+    return _probe_then_append(
+        index_dir, matches_dir, adx_lsh_buckets, "vec_id", "tbl", _probe
+    )
 
 
 def adx_index_stream(
@@ -1403,17 +1331,12 @@ def adx_index_stream(
     """Start the incremental ADAPTIVE ANN index ingest stream (see
     ``make_adx_index_appender``); ``available_now=True`` is the backfill
     shape."""
-    writer = (
-        read_embeddings_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            make_adx_index_appender(index_dir, matches_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        read_embeddings_stream(spark, input_dir),
+        make_adx_index_appender(index_dir, matches_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1461,11 +1384,11 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
     `_semdedup_screen`'s keeper set bit-for-bit (no priors, same rank,
     same screen), which the pytest pins against the batch twin.
 
-    Exactly-once/replay is the pmh recipe verbatim: every output is a
-    per-batch ``mode=overwrite`` directory keyed by batch/ingest id, and
-    every read filters ``ingest_batch < batch_id`` — a replayed batch
-    sees the same priors, derives the same growth, and rewrites
-    identical outputs. Scale: per-batch cost is O(batch·kc) routing +
+    Exactly-once/replay follows ``_probe_then_append``'s contract: every
+    output is a per-batch ``mode=overwrite`` directory keyed by
+    batch/ingest id, and every read filters ``ingest_batch < batch_id`` —
+    a replayed batch sees the same priors, derives the same growth, and
+    rewrites identical outputs. Scale: per-batch cost is O(batch·kc) routing +
     a cell-keyed equi-join against the (width-bounded-per-cell) fine
     centroids + a (cell, fine)-keyed screen join against keepers of the
     batch's own clusters only — work tracks the BATCH, never the
@@ -1489,13 +1412,6 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
     counts_dir = os.path.join(state_dir, "counts")
     fines_dir = os.path.join(state_dir, "fines")
     keepers_dir = os.path.join(state_dir, "keepers")
-
-    def _has_prior(dirpath: str, batch_id: int) -> bool:
-        return any(
-            e.startswith("ingest_batch=")
-            and int(e.split("=", 1)[1]) < batch_id
-            for e in (os.listdir(dirpath) if os.path.isdir(dirpath) else [])
-        )
 
     def _read_prior(spark, dirpath: str, batch_id: int) -> DataFrame:
         spark.catalog.refreshByPath(dirpath)
@@ -1761,15 +1677,12 @@ def semdedup_index_stream(
     """Start the incremental SemDeDup index ingest stream (see
     ``make_semdedup_maintainer``); ``available_now=True`` is the backfill
     shape."""
-    writer = (
-        read_embeddings_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_semdedup_maintainer(state_dir, stats_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        read_embeddings_stream(spark, input_dir),
+        make_semdedup_maintainer(state_dir, stats_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1799,15 +1712,14 @@ def make_scd2_state_merger(state_dir: str):
        order);
     4. new state = closed history ∪ (re)closed opens ∪ survivor versions.
 
-    Version-appending is NOT idempotent, so exactly-once uses the same
-    applied-batch-id JSON ledger as ``make_hist_state_merger`` (ledger
-    written last inside the staging dir, swap commits table + ledger
-    atomically; ``_recover_state_swap`` covers the rename crash
-    windows). Input batches are assumed event-time ordered per user
-    across batches (the file source delivers files in arrival order; an
-    out-of-order feed needs a watermarked re-sort upstream, exactly as
-    a production CDC tailer provides) — the equality pytest proves the
-    incremental fold converges to the batch builder's table bit-for-bit.
+    Version-appending is NOT idempotent, so exactly-once goes through
+    the applied-batch ledger of ``_ledgered_state_merger``, as in
+    ``make_hist_state_merger``. Input batches are assumed event-time
+    ordered per user across batches (the file source delivers files in
+    arrival order; an out-of-order feed needs a watermarked re-sort
+    upstream, exactly as a production CDC tailer provides) — the equality
+    pytest proves the incremental fold converges to the batch builder's
+    table bit-for-bit.
 
     Scale: per-batch work is the batch's own key-partitioned windows
     plus a key-equi-join against ONLY the open versions (dimension-key
@@ -1816,9 +1728,6 @@ def make_scd2_state_merger(state_dir: str):
     becomes a MERGE commit and the closed-history rewrite disappears
     (copy-on-write is the plain-parquet cost of the demo, disclosed).
     """
-    import json
-    import os
-
     from pyspark.sql import Window as W
 
     from big_data_medical_analysis_spark.operators.etl import (
@@ -1827,80 +1736,54 @@ def make_scd2_state_merger(state_dir: str):
         scd2_versions,
     )
 
-    cur_dir = os.path.join(state_dir, "current")
-
-    def _complete(staging: str) -> bool:
-        return os.path.exists(
-            os.path.join(staging, "_SUCCESS")
-        ) and os.path.exists(os.path.join(staging, HIST_APPLIED_FILE))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_state_swap(state_dir, cur_dir, _complete)
-        applied: list[int] = []
-        ledger = os.path.join(cur_dir, HIST_APPLIED_FILE)
-        if os.path.exists(ledger):
-            with open(ledger) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # redelivered batch: versions already appended, skip
+    def _fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         log_b = scd2_event_log(batch_df)
-        if os.path.exists(cur_dir):
-            cur = spark.read.parquet(cur_dir).select(
-                "user_id", "status", "eff_from", "eff_to", "version"
+        if cur is None:
+            return scd2_versions(log_b)
+        cur = cur.select("user_id", "status", "eff_from", "eff_to", "version")
+        opens = cur.filter(F.col("eff_to").isNull()).select(
+            "user_id",
+            F.col("status").alias("open_status"),
+            F.col("eff_from").alias("open_from"),
+            F.col("version").alias("open_ver"),
+        )
+        wb = W.partitionBy("user_id").orderBy("es", "event_id")
+        coll = (
+            scd2_collapse(log_b)
+            .withColumn("rn", F.row_number().over(wb))
+            .join(opens, "user_id", "left")
+        )
+        surv = coll.filter(
+            ~(
+                (F.col("rn") == 1)
+                & F.col("open_status").isNotNull()
+                & (F.col("status") == F.col("open_status"))
             )
-            opens = cur.filter(F.col("eff_to").isNull()).select(
-                "user_id",
-                F.col("status").alias("open_status"),
-                F.col("eff_from").alias("open_from"),
-                F.col("version").alias("open_ver"),
-            )
-            wb = W.partitionBy("user_id").orderBy("es", "event_id")
-            coll = (
-                scd2_collapse(log_b)
-                .withColumn("rn", F.row_number().over(wb))
-                .join(opens, "user_id", "left")
-            )
-            surv = coll.filter(
-                ~(
-                    (F.col("rn") == 1)
-                    & F.col("open_status").isNotNull()
-                    & (F.col("status") == F.col("open_status"))
-                )
-            )
-            surv_v = surv.select(
-                "user_id",
-                "status",
-                F.col("es").alias("eff_from"),
-                F.lead("es").over(wb).alias("eff_to"),
-                (F.row_number().over(wb) + F.coalesce("open_ver", F.lit(0)))
-                .cast("long")
-                .alias("version"),
-            )
-            closes = surv.groupBy("user_id").agg(
-                F.min("es").alias("close_es")
-            )
-            opens_new = opens.join(closes, "user_id", "left").select(
-                "user_id",
-                F.col("open_status").alias("status"),
-                F.col("open_from").alias("eff_from"),
-                F.col("close_es").cast("long").alias("eff_to"),
-                F.col("open_ver").alias("version"),
-            )
-            new = (
-                cur.filter(F.col("eff_to").isNotNull())
-                .unionByName(opens_new)
-                .unionByName(surv_v)
-            )
-        else:
-            new = scd2_versions(log_b)
-        staging = os.path.join(state_dir, f"staging_{batch_id}")
-        new.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, HIST_APPLIED_FILE), "w") as f:
-            json.dump(sorted(set(applied) | {batch_id}), f)
-        _commit_state_swap(state_dir, cur_dir, staging, batch_id)
+        )
+        surv_v = surv.select(
+            "user_id",
+            "status",
+            F.col("es").alias("eff_from"),
+            F.lead("es").over(wb).alias("eff_to"),
+            (F.row_number().over(wb) + F.coalesce("open_ver", F.lit(0)))
+            .cast("long")
+            .alias("version"),
+        )
+        closes = surv.groupBy("user_id").agg(F.min("es").alias("close_es"))
+        opens_new = opens.join(closes, "user_id", "left").select(
+            "user_id",
+            F.col("open_status").alias("status"),
+            F.col("open_from").alias("eff_from"),
+            F.col("close_es").cast("long").alias("eff_to"),
+            F.col("open_ver").alias("version"),
+        )
+        return (
+            cur.filter(F.col("eff_to").isNotNull())
+            .unionByName(opens_new)
+            .unionByName(surv_v)
+        )
 
-    return _merge
+    return _ledgered_state_merger(state_dir, _fold)
 
 
 def scd2_state_stream(
@@ -1914,18 +1797,15 @@ def scd2_state_stream(
     event files → per-batch collapse + boundary merge → ledger-gated
     exactly-once version append into the persisted dimension table.
 
-    ``available_now=True``: backfill shape (see ``hll_state_stream``) —
+    ``available_now=True``: backfill shape (see ``_start_foreach_batch``) —
     drain the backlog into the dimension, exit, run live later on the
     same checkpoint; the ledger spans the boundary unchanged."""
-    writer = (
-        read_event_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_scd2_state_merger(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        read_event_stream(spark, input_dir),
+        make_scd2_state_merger(state_dir),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def pit_enrich_stream(events: DataFrame) -> DataFrame:

@@ -196,6 +196,28 @@ def test_connected_components_hand_graph(spark):
     }
 
 
+def test_connected_components_concurrent_calls(spark):
+    """Two calls running at once in one driver each keep their own
+    bucketed edge table: neither drops or overwrites the other's, so both
+    return their own graph's labels."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def chain(lo: int, n: int):
+        edges = spark.createDataFrame(
+            [(lo + i, lo + i + 1) for i in range(n)], "src long, dst long"
+        )
+        return {
+            r.node: r.cluster_id
+            for r in D.connected_components(edges).collect()
+        }
+
+    with ThreadPoolExecutor(2) as pool:
+        a = pool.submit(chain, 100, 8)
+        b = pool.submit(chain, 200, 6)
+        assert a.result() == {100 + i: 100 for i in range(9)}
+        assert b.result() == {200 + i: 200 for i in range(7)}
+
+
 def test_dedup_components_keeper_semantics(spark, sf_dir):
     """Every cluster has exactly one keeper (doc_id == cluster_id), the
     keeper is the min id, and sizes match the label multiplicity."""

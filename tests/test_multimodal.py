@@ -88,16 +88,17 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
     # (ADVICE r16: double-sum merge order across partitions is
     # nondeterministic, so a value near a round-4 boundary could flake
     # under exact set equality).
-    fused = {
-        r.label: r for r in M.image_decode_stats(spark, sf_dir).collect()
-    }
+    # Each side is keyed into a dict; a duplicated key would silently
+    # collapse rows, so each dict must keep every collected row.
+    fused_rows = M.image_decode_stats(spark, sf_dir).collect()
+    fused = {r.label: r for r in fused_rows}
+    assert len(fused) == len(fused_rows)
     imgs = M.normalize_pipeline(M.synth_images(spark, sf_dir))
     stats = imgs.withColumn(
         "s", M.image_stats("norm_content", "height", "width")
     ).select("label", "s.p_min", "s.p_max", "s.p_mean")
-    composed = {
-        r.label: r
-        for r in stats.groupBy("label")
+    composed_rows = (
+        stats.groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_images"),
             F.min("p_min").alias("min_pixel"),
@@ -107,7 +108,9 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
             F.sum((F.col("p_max") == 255).cast("long")).alias("n_full_high"),
         )
         .collect()
-    }
+    )
+    composed = {r.label: r for r in composed_rows}
+    assert len(composed) == len(composed_rows)
     assert set(fused) == set(composed)
     for label, f in fused.items():
         c = composed[label]
@@ -116,13 +119,11 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
                                    c.n_full_low, c.n_full_high)
         assert f.avg_mean_pixel == pytest.approx(c.avg_mean_pixel, abs=1e-4)
 
-    fan = {
-        r.variant: r
-        for r in M.image_augment_fanout(spark, sf_dir).collect()
-    }
-    composed_fan = {
-        r.variant: r
-        for r in M.augment_pipeline(M.synth_images(spark, sf_dir))
+    fan_rows = M.image_augment_fanout(spark, sf_dir).collect()
+    fan = {r.variant: r for r in fan_rows}
+    assert len(fan) == len(fan_rows)
+    composed_fan_rows = (
+        M.augment_pipeline(M.synth_images(spark, sf_dir))
         .groupBy("variant")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -130,7 +131,9 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
             F.avg(F.length("aug_content")).alias("avg_bytes"),
         )
         .collect()
-    }
+    )
+    composed_fan = {r.variant: r for r in composed_fan_rows}
+    assert len(composed_fan) == len(composed_fan_rows)
     assert set(fan) == set(composed_fan)
     for variant, f in fan.items():
         c = composed_fan[variant]
@@ -198,20 +201,94 @@ def test_jpeg_smooth_image_compresses_and_reconstructs():
     assert np.abs(back.astype(int) - smooth.astype(int)).max() <= 2
 
 
-def test_jpeg_decoder_rejects_unsupported():
+def _with_dht(blob: bytes, payload: bytes) -> bytes:
+    """``blob`` with its DHT segment payload (and length field) replaced."""
+    at = blob.find(b"\xff\xc4")
+    old_len = int.from_bytes(blob[at + 2 : at + 4], "big")
+    return (
+        blob[: at + 2]
+        + (len(payload) + 2).to_bytes(2, "big")
+        + payload
+        + blob[at + 2 + old_len :]
+    )
+
+
+def _dht_payload(blob: bytes) -> bytes:
+    at = blob.find(b"\xff\xc4")
+    return blob[at + 4 : at + 2 + int.from_bytes(blob[at + 2 : at + 4], "big")]
+
+
+def _malformed_jpeg(case: str) -> bytes:
+    """An ``encode_jpeg`` stream edited into one malformed/unsupported
+    input; DHT cases edit the DC table (class 0) or the AC table after it."""
     from big_data_medical_analysis_spark.operators import jpeg_codec as J
 
-    with pytest.raises(ValueError):
-        J.decode_jpeg(b"not a jpeg")
-    img = np.zeros((8, 8), dtype=np.uint8)
-    blob = bytearray(J.encode_jpeg(img, 75))
-    # flip SOF0 (0xC0) to progressive SOF2 (0xC2): must reject, not guess
-    sof = blob.find(b"\xff\xc0")
-    blob[sof + 1] = 0xC2
-    with pytest.raises(ValueError):
-        J.decode_jpeg(bytes(blob))
-    with pytest.raises(ValueError):
-        J.decode_jpeg(J.encode_jpeg(img, 75)[:-10])  # truncated scan
+    blob = J.encode_jpeg(np.zeros((8, 8), dtype=np.uint8), 75)
+    dht = bytearray(_dht_payload(blob))
+    ac_at = 1 + 16 + sum(J._DC_BITS)  # the AC table's class/id byte
+    if case == "not_jpeg":
+        return b"not a jpeg"
+    if case == "progressive":  # SOF0 (0xC0) flipped to SOF2: reject, not guess
+        sof = blob.find(b"\xff\xc0")
+        return blob[: sof + 1] + b"\xc2" + blob[sof + 2 :]
+    if case == "truncated_scan":
+        return blob[:-10]
+    if case == "dht_counts_overrun":  # AC table's 16 count bytes cut at 8
+        return _with_dht(blob, bytes(dht[: ac_at + 1 + 8]))
+    if case == "dht_symbols_overrun":  # AC table's symbol bytes cut short
+        return _with_dht(blob, bytes(dht[: ac_at + 1 + 16 + 100]))
+    if case == "dht_oversubscribed":  # three 1-bit DC codes, same total
+        counts = list(J._DC_BITS)
+        counts[0] += 3
+        counts[2] -= 3
+        dht[1:17] = bytes(counts)
+    else:  # dht_dc_symbol: DC symbol 16
+        dht[17] = 16
+    return _with_dht(blob, bytes(dht))
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "not_jpeg",
+        "progressive",
+        "truncated_scan",
+        "dht_counts_overrun",
+        "dht_symbols_overrun",
+        "dht_oversubscribed",
+        "dht_dc_symbol",
+    ],
+)
+def test_jpeg_decoder_rejects_unsupported(case):
+    from big_data_medical_analysis_spark.operators import jpeg_codec as J
+
+    # a malformed DHT raises the decoder's ValueError, never an
+    # IndexError, an unbounded lookup table or a negative shift
+    match = "invalid Huffman" if case.startswith("dht_") else None
+    with pytest.raises(ValueError, match=match):
+        J.decode_jpeg(_malformed_jpeg(case))
+
+
+def test_jpeg_lut_cache_is_bounded():
+    """Decoding more distinct Huffman tables than the LUT cache's cap must
+    leave at most the cap cached (each entry is ~1 MB per executor)."""
+    from big_data_medical_analysis_spark.operators import jpeg_codec as J
+
+    img = np.random.RandomState(3).randint(0, 256, size=(8, 8)).astype(np.uint8)
+    blob = J.encode_jpeg(img, 75)
+    dht = _dht_payload(blob)
+    saved = dict(J._LUT_CACHE)
+    try:
+        for k in range(J._LUT_CACHE_MAX + 8):
+            # an extra, unused AC table (class 1, id 1): one 1-bit code
+            # whose symbol makes each stream's table distinct
+            extra = bytes([0x11, 1] + [0] * 15 + [k])
+            back = J.decode_jpeg(_with_dht(blob, dht + extra))
+            assert np.abs(back.astype(int) - img.astype(int)).max() <= 64
+            assert len(J._LUT_CACHE) <= J._LUT_CACHE_MAX
+    finally:
+        J._LUT_CACHE.clear()
+        J._LUT_CACHE.update(saved)
 
 
 def test_jpeg_byte_stuffing_roundtrips():

@@ -526,6 +526,50 @@ def test_geometry_ladder_halves_candidates_per_bit(spark, sf_dir):
         assert 2.0 <= ratio <= 8.0, (lo, hi, ratio)
 
 
+@pytest.mark.parametrize("tables,bits", [(6, 8), (4, 12), (3, 16)])
+def test_sign_lsh_buckets_match_sql_twin(spark, tables, bits):
+    """The numpy sign-LSH bucketer and its generated DuckDB twin must agree
+    row for row at every geometry the module serves (fixed ANN, geometry
+    ladder, adaptive max resolution) — including the margin-0 tie, where
+    both engines set the bit (the all-zero vector)."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.RandomState(11)
+    vecs = [rng.normal(scale=0.1, size=S.RP_IN_DIM).tolist() for _ in range(199)]
+    vecs.append([0.0] * S.RP_IN_DIM)
+    ids = list(range(1000, 1000 + len(vecs)))
+    got = sorted(
+        (r.vec_id, r.tbl, r.bucket)
+        for r in S.sign_lsh_buckets(
+            spark.createDataFrame(
+                list(zip(ids, vecs)), "vec_id long, embedding array<double>"
+            ),
+            tables,
+            bits,
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+            }
+        ),
+    )
+    want = sorted(
+        con.execute(
+            f"WITH {S._SCALED_SQL}, {S.sign_lsh_sql('scaled', tables, bits)} "
+            "SELECT vec_id, tbl, bucket FROM banded"
+        ).fetchall()
+    )
+    assert len(got) == len(vecs) * tables
+    assert got == want
+
+
 def test_semdedup_prune_invariants(spark, sf_dir):
     """SemDeDup per-cluster rows must conserve members (kept + pruned =
     members, rate = pruned/members), cover every vector exactly once
