@@ -622,10 +622,16 @@ def main() -> None:
         c: round(sum(times[n] for n in members if n in times), 3)
         for c, members in COHORTS.items()
     }
+    # the core count and master the numbers were measured with, so a
+    # reader never has to infer them from the calibration factor
+    sc = spark.sparkContext
+    cpus, master = sc.defaultParallelism, sc.master
     detail = {
         "metric": "headline_queries_total_wall",
         "runs": N_RUNS,
         "sf": sf_val,
+        "cpus": cpus,
+        "master": master,
         "queries": times,
         "spread": spread,
         # Per-pass wall arrays for HIGH-VARIANCE members (spread > min):
@@ -662,6 +668,8 @@ def main() -> None:
                 "runs": N_RUNS,
                 "queries": {n: times[n] for n in HEADLINE if n in times},
                 "sf": sf_val,
+                "cpus": cpus,
+                "master": master,
                 # the original 11-query relational headline vs the pillar
                 # extensions added later
                 "headline_total": round(

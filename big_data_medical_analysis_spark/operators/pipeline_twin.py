@@ -45,6 +45,15 @@ trajectory, so only (img_id, variant, pix_sum, n_pix) rows come back.
 Kernel parity with those stages is byte-exact (same ``equalize_hist`` /
 ``augment_variants`` calls — pinned by tests/test_pipeline_twin.py).
 
+The report plans each source frame once: the label aggregate (ingest
+and dedup rows), the checkpointed K-row client statistics (split rows),
+the split audit over the features (augment and audit rows) and the
+fed-avg chain that ends in the held-out aggregate (trajectory and eval
+rows). Each frame emits all of its rows from one projection
+(``_report_rows``, which states why), so the twin's report plans 9
+shuffle exchanges and 5 broadcast joins where a per-metric union planned
+32 and 17.
+
 At 100 TB: the label CSVs scan distributed; the image pass is
 embarrassingly parallel after ``fan_out``; every audit/aggregate is a
 map-side-combinable shuffle on narrow rows; the fed-avg loop runs on a
@@ -56,10 +65,11 @@ broadcasts the 1-row final model.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -107,6 +117,12 @@ _TWIN_CLIENT = (
     "CAST(pmod(CAST(conv(substring(md5(concat(CAST(img_id AS STRING), ':', "
     "CAST(variant AS STRING))), 1, 8), 16, 10) AS BIGINT), "
     f"{TWIN_N_CLIENTS}) AS INT)"
+)
+
+# y of the fed-avg fit: an image variant's mean pixel in exact micro units
+_TWIN_YC = (
+    "CAST(round(CAST(pix_sum AS DOUBLE) * 1000000.0 "
+    "/ CAST(n_pix AS DOUBLE)) AS BIGINT)"
 )
 
 
@@ -260,22 +276,159 @@ def _augment_features(images: DataFrame, *, synthesize: bool = False) -> DataFra
     )
 
 
-def _metric_rows(df: DataFrame, stage: str, idx_col, *metric_value) -> DataFrame:
-    """Shape helper: project (stage, idx, metric, value) rows."""
-    outs = []
-    for metric, value in metric_value:
-        outs.append(
-            df.select(
-                F.lit(stage).alias("stage"),
-                idx_col.cast("int").alias("idx"),
-                F.lit(metric).alias("metric"),
-                value.cast("double").alias("value"),
+def _report_rows(df: DataFrame, *rows) -> DataFrame:
+    """Project every (stage, idx, metric, value) report row that ``df``
+    owns, in declared order, from ONE projection: each of ``rows`` is a
+    ``(stage, idx, metric, value)`` tuple whose ``idx`` is an int or a
+    Column and whose ``value`` is a Column over ``df``.
+
+    One projection per source frame is the report's rule. A union with
+    one branch per metric lets Catalyst prune each branch's aggregate
+    down to its one column, so the branches' subtrees differ, exchange
+    reuse (which needs identical subtrees) never fires, and every branch
+    re-runs its input's shuffles and broadcasts — one partial+final pair
+    per metric instead of one per frame. ``inline`` of an array of
+    structs emits all of a frame's rows from a single copy of its plan.
+    """
+    return df.select(
+        F.inline(
+            F.array(
+                *(
+                    F.struct(
+                        F.lit(stage).alias("stage"),
+                        (idx if isinstance(idx, Column) else F.lit(idx))
+                        .cast("int")
+                        .alias("idx"),
+                        F.lit(metric).alias("metric"),
+                        value.cast("double").alias("value"),
+                    )
+                    for stage, idx, metric, value in rows
+                )
             )
         )
-    u = outs[0]
-    for o in outs[1:]:
-        u = u.unionAll(o)
-    return u
+    )
+
+
+def _client_stats(features: DataFrame) -> DataFrame:
+    """The K-row checkpointed per-client frame: the exact int64 fed-avg
+    sufficient statistics (x = variant index, y = mean pixel in micro
+    units) plus the split audit's Pneumonia-positive count, so the
+    per-client report rows read the same checkpoint the rounds do and
+    the image pass stays out of the loop."""
+    return checkpoint_pinned(
+        features.select(
+            "client",
+            "pneumonia",
+            F.col("variant").cast("long").alias("qc"),
+            F.expr(_TWIN_YC).alias("yc"),
+        )
+        .groupBy("client")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("qc").alias("sx"),
+            F.sum("yc").alias("sy"),
+            F.sum(F.col("qc") * F.col("qc")).alias("sxx"),
+            F.sum(F.col("qc") * F.col("yc")).alias("sxy"),
+            F.sum("pneumonia").cast("long").alias("pneu_pos"),
+        )
+    )
+
+
+def _split_fedavg_eval_report(
+    spark: SparkSession, features: DataFrame, stats: DataFrame,
+    evaluation: DataFrame,
+) -> list[DataFrame]:
+    """The report rows downstream of the client split, shared by the twin
+    and its replay: ``features`` are the training rows (client, img_id,
+    variant), ``stats`` is ``_client_stats(features)``, ``evaluation``
+    the held-out (qc, yc) rows. Three frames, one projection each:
+
+    - ``stats``: per-client ``n_rows`` (= n) and ``pneumonia_pos_rows``;
+    - the split audit over ``features``: ``n_augmented``, the overlap
+      keys (``min(client) != max(client)`` per (img_id, variant) — the
+      ``countDistinct(client) > 1`` predicate with one shuffle fewer)
+      and the completeness delta against the clients' summed n;
+    - the fed-avg chain: each round's 1-row server state carries the
+      earlier rounds' (s0m, s1m) forward, and the held-out aggregate
+      carries the last state's, so the trajectory, the eval row count
+      and the MSE all come out of one chain (a per-round report branch
+      would replan every round before it). The MSE applies the final
+      server state in y-micro units: w0m/w1m carry an EXTRA 1e6
+      quantization factor (micro-of-micro), undone here. The trajectory
+      leaves through the held-out aggregate, so an empty held-out slice
+      reports it as null.
+    """
+    split_audit = (
+        features.groupBy("img_id", "variant")
+        .agg(
+            F.count(F.lit(1)).alias("c"),
+            (F.min("client") != F.max("client")).alias("shared"),
+        )
+        .agg(
+            F.sum("c").alias("n_aug"),
+            F.count_if("shared").alias("n_overlap"),
+        )
+        .crossJoin(F.broadcast(stats.agg(F.sum("n").alias("n_split"))))
+    )
+
+    w0m, w1m = _fedavg_fit_exprs(TWIN_LAMBDA)
+    server = spark.range(1).selectExpr("0.0 AS s0", "0.0 AS s1")
+    carried: list[str] = []
+    for r in range(1, TWIN_N_ROUNDS + 1):
+        server = (
+            stats.crossJoin(F.broadcast(server))
+            .selectExpr("client", "n", w0m, w1m, *carried)
+            .selectExpr(*_FEDAVG_SRV_EXPRS, *(f"max({c}) AS {c}" for c in carried))
+            .selectExpr(
+                "CAST(s0m AS DOUBLE) / 1000000.0 AS s0",
+                "CAST(s1m AS DOUBLE) / 1000000.0 AS s1",
+                *carried,
+                f"s0m AS s0m_{r}",
+                f"s1m AS s1m_{r}",
+            )
+        )
+        carried += [f"s0m_{r}", f"s1m_{r}"]
+    last = TWIN_N_ROUNDS
+    held_out = evaluation.crossJoin(F.broadcast(server)).agg(
+        F.count(F.lit(1)).alias("n_eval"),
+        F.round(
+            F.avg(F.pow(
+                (
+                    F.col("yc").cast("double")
+                    - (F.col(f"s0m_{last}") + F.col(f"s1m_{last}") * F.col("qc"))
+                    / 1e6
+                )
+                / 1e6,
+                F.lit(2),
+            )),
+            6,
+        ).alias("mse"),
+        *(F.max(c).alias(c) for c in carried),
+    )
+
+    return [
+        _report_rows(
+            stats,
+            ("split", F.col("client"), "n_rows", F.col("n")),
+            ("split", F.col("client"), "pneumonia_pos_rows", F.col("pneu_pos")),
+        ),
+        _report_rows(
+            split_audit,
+            ("augment", -1, "n_augmented", F.col("n_aug")),
+            ("audit", -1, "overlap_keys", F.col("n_overlap")),
+            ("audit", -1, "completeness_delta", F.col("n_aug") - F.col("n_split")),
+        ),
+        _report_rows(
+            held_out,
+            *(
+                ("fedavg", r, m, F.col(f"{m}_{r}"))
+                for r in range(1, TWIN_N_ROUNDS + 1)
+                for m in ("s0m", "s1m")
+            ),
+            ("eval", -1, "n_eval_rows", F.col("n_eval")),
+            ("eval", -1, "mse_px2", F.col("mse")),
+        ),
+    ]
 
 
 @register("chexpert_pipeline_twin", oracle=None, category="multimodal")
@@ -293,7 +446,11 @@ def chexpert_pipeline_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one (stage, idx, metric, value) row per pipeline audit metric
     and trained weight — 23 rows at any scale factor (axis-sized: stages
-    x clients x rounds, never data-sized). Rows-only by census: the
+    x clients x rounds, never data-sized), projected from four frames
+    that each appear once in the plan: the label aggregate (the dedup
+    guard's groupBy, with a per-path copy count riding along for the
+    three ingest counts), the client statistics, the split audit and the
+    fed-avg chain (``_split_fedavg_eval_report``). Rows-only by census: the
     feature values derive from the binary image codec path, which no
     DuckDB oracle can express; every non-codec stage has a full-oracle
     twin elsewhere (csv_roundtrip_revenue, dedup_guard,
@@ -305,7 +462,9 @@ def chexpert_pipeline_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan_out); everything after ``features`` is aggregates over 5-column
     int rows; the fed-avg loop is arithmetic on a K-row checkpointed
     frame vs a broadcast 1-row server state; the eval model join
-    broadcasts 1 row. Nothing data-sized ever reaches the driver.
+    broadcasts 1 row. Nothing data-sized ever reaches the driver. The
+    report costs 9 shuffle exchanges and 5 broadcast joins, 15 jobs on
+    top of the 8 the construction runs.
     """
     train_dir, eval_dir = write_label_csvs(spark, sf_dir)
     rebase = F.concat(F.lit(_BASE_DIR), F.col("Path")).alias("path")
@@ -319,15 +478,31 @@ def chexpert_pipeline_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebase, "Pneumonia"
     )
 
-    # --- ingest audits + dedup guard (reference :270-283) ---------------
-    n_train_csv = train_labels.agg(F.count(F.lit(1)).alias("v"))
-    dup_paths = (
-        train_labels.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .agg(F.count(F.lit(1)).alias("v"))
+    # --- ingest audits + dedup guard (reference :270-283): ONE aggregate
+    # over the deduped labels. dropDuplicates(["path"]) is this groupBy
+    # with first(); the per-path copy count rides along for the audits,
+    # and the eval file's rows join the same aggregate as 1-copy rows.
+    per_path = train_labels.groupBy("path").agg(
+        F.first("Pneumonia").alias("Pneumonia"),
+        F.count(F.lit(1)).alias("copies"),
     )
-    deduped = train_labels.dropDuplicates(["path"])
+    deduped = per_path.select("path", "Pneumonia")
+    is_train = F.col("is_train")
+    label_audit = (
+        per_path.select("copies", F.lit(True).alias("is_train"))
+        .unionByName(
+            eval_labels.select(
+                F.lit(1).cast("long").alias("copies"),
+                F.lit(False).alias("is_train"),
+            )
+        )
+        .agg(
+            F.sum(F.when(is_train, F.col("copies"))).alias("n_train_csv"),
+            F.count_if(is_train & (F.col("copies") > 1)).alias("n_dup"),
+            F.count_if(~is_train).alias("n_eval_csv"),
+            F.count_if(is_train).alias("n_unique"),
+        )
+    )
 
     # --- ONE fused image pass over train ∪ eval (corrections §2.2.1/
     # 2.2.2): the file-of-origin flag rides along, so both slices share
@@ -343,125 +518,22 @@ def chexpert_pipeline_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     features = all_features.filter(F.col("is_eval") == 0).withColumn(
         "client", F.expr(_TWIN_CLIENT)
     )
-    eval_features = all_features.filter(F.col("is_eval") == 1)
-
-    # --- split + audits (reference verify_unique_split / test_partitioning)
-    per_client = features.groupBy("client").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("pneumonia").cast("long").alias("pneu_pos"),
-    )
-    # overlap: a (img_id, variant) key assigned to >1 client (0 by
-    # construction — audited from the DATA, as the reference does)
-    overlap = (
-        features.groupBy("img_id", "variant")
-        .agg(F.countDistinct("client").alias("nc"))
-        .filter(F.col("nc") > 1)
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    completeness = per_client.crossJoin(
-        F.broadcast(features.agg(F.count(F.lit(1)).alias("total")))
-    ).agg((F.max("total") - F.sum("n_rows")).alias("v"))
-
-    # --- fed-avg rounds on exact int64 sufficient statistics ------------
-    # x = variant index, y = mean-pixel in micro units (exact ints end to
-    # end; the double arithmetic after them is the shared fixed op tree)
-    shards = features.select(
-        "client",
-        F.col("variant").cast("long").alias("qc"),
-        F.expr(
-            "CAST(round(CAST(pix_sum AS DOUBLE) * 1000000.0 "
-            "/ CAST(n_pix AS DOUBLE)) AS BIGINT)"
-        ).alias("yc"),
-    )
-    stats = checkpoint_pinned(  # K rows; cuts the image pass out of the loop
-        shards.groupBy("client").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("qc").alias("sx"),
-            F.sum("yc").alias("sy"),
-            F.sum(F.col("qc") * F.col("qc")).alias("sxx"),
-            F.sum(F.col("qc") * F.col("yc")).alias("sxy"),
-        )
-    )
-    w0m, w1m = _fedavg_fit_exprs(TWIN_LAMBDA)
-    s0m_e, s1m_e, total_e = _FEDAVG_SRV_EXPRS
-    server = spark.range(1).selectExpr("0.0 AS s0", "0.0 AS s1")
-    srv_rounds = []
-    for _ in range(TWIN_N_ROUNDS):
-        fits = stats.crossJoin(F.broadcast(server)).selectExpr(
-            "client", "n", w0m, w1m
-        )
-        srv = fits.selectExpr(s0m_e, s1m_e, total_e)
-        srv_rounds.append(srv)
-        server = srv.selectExpr(
-            "CAST(s0m AS DOUBLE) / 1000000.0 AS s0",
-            "CAST(s1m AS DOUBLE) / 1000000.0 AS s1",
-        )
-
-    # --- evaluation on the held-out file (federated :155-172) -----------
-    final = srv_rounds[-1].select("s0m", "s1m")
-    eval_scored = eval_features.crossJoin(F.broadcast(final)).select(
-        # y and the model are both in y-micro units: w0m/w1m carry an
-        # EXTRA 1e6 quantization factor (micro-of-micro), undone here
-        (
-            F.expr(
-                "CAST(round(CAST(pix_sum AS DOUBLE) * 1000000.0 "
-                "/ CAST(n_pix AS DOUBLE)) AS BIGINT)"
-            )
-            - (F.col("s0m") + F.col("s1m") * F.col("variant")) / 1e6
-        ).alias("resid_micro")
-    )
-    mse = eval_scored.agg(
-        F.round(
-            F.avg(F.pow(F.col("resid_micro") / 1e6, F.lit(2))), 6
-        ).alias("v")
+    stats = _client_stats(features)
+    evaluation = all_features.filter(F.col("is_eval") == 1).select(
+        F.col("variant").cast("long").alias("qc"), F.expr(_TWIN_YC).alias("yc")
     )
 
-    # --- assemble the (stage, idx, metric, value) report -----------------
-    neg1 = F.lit(-1)
-    parts = [
-        _metric_rows(n_train_csv, "ingest", neg1, ("n_train_csv_rows", F.col("v"))),
-        _metric_rows(dup_paths, "ingest", neg1, ("n_dup_paths", F.col("v"))),
-        _metric_rows(
-            eval_labels.agg(F.count(F.lit(1)).alias("v")),
-            "ingest", neg1, ("n_eval_csv_rows", F.col("v")),
+    # --- the (stage, idx, metric, value) report: one projection per frame
+    return reduce(DataFrame.unionAll, [
+        _report_rows(
+            label_audit,
+            ("ingest", -1, "n_train_csv_rows", F.col("n_train_csv")),
+            ("ingest", -1, "n_dup_paths", F.col("n_dup")),
+            ("ingest", -1, "n_eval_csv_rows", F.col("n_eval_csv")),
+            ("dedup", -1, "n_unique_images", F.col("n_unique")),
         ),
-        _metric_rows(
-            deduped.agg(F.count(F.lit(1)).alias("v")),
-            "dedup", neg1, ("n_unique_images", F.col("v")),
-        ),
-        _metric_rows(
-            features.agg(F.count(F.lit(1)).alias("v")),
-            "augment", neg1, ("n_augmented", F.col("v")),
-        ),
-        _metric_rows(
-            per_client, "split", F.col("client"),
-            ("n_rows", F.col("n_rows")),
-            ("pneumonia_pos_rows", F.col("pneu_pos")),
-        ),
-        _metric_rows(overlap, "audit", neg1, ("overlap_keys", F.col("v"))),
-        _metric_rows(
-            completeness, "audit", neg1, ("completeness_delta", F.col("v"))
-        ),
-    ]
-    for r, srv in enumerate(srv_rounds, start=1):
-        parts.append(
-            _metric_rows(
-                srv, "fedavg", F.lit(r),
-                ("s0m", F.col("s0m")),
-                ("s1m", F.col("s1m")),
-            )
-        )
-    parts.append(
-        _metric_rows(
-            eval_features.agg(F.count(F.lit(1)).alias("v")),
-            "eval", neg1, ("n_eval_rows", F.col("v")),
-        )
-    )
-    parts.append(_metric_rows(mse, "eval", neg1, ("mse_px2", F.col("v"))))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+        *_split_fedavg_eval_report(spark, features, stats, evaluation),
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -484,18 +556,8 @@ _TWIN_CLIENT_DUCK = (
     f"% {TWIN_N_CLIENTS} AS INTEGER)"
 )
 
-_TWIN_YC = (
-    "CAST(round(CAST(pix_sum AS DOUBLE) * 1000000.0 "
-    "/ CAST(n_pix AS DOUBLE)) AS BIGINT)"
-)
-
 
 def _twin_replay_sql() -> str:
-    from big_data_medical_analysis_spark.operators.udf_surface import (
-        _FEDAVG_SRV_EXPRS,
-        _fedavg_fit_exprs,
-    )
-
     w0m, w1m = _fedavg_fit_exprs(TWIN_LAMBDA)
     s0m, s1m, total = _FEDAVG_SRV_EXPRS
     rounds = []
@@ -634,7 +696,12 @@ def chexpert_twin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     and everything here is aggregates over narrow int rows: broadcast
     1-row server state per fed-avg round, K-row client stats, map-side
     combinable counts. The fixture join prunes to (img_id, variant,
-    pix_sum, n_pix) at the scan.
+    pix_sum, n_pix) at the scan, and is pinned once for both slices as
+    the twin pins its feature pass. The report has the twin's shape —
+    the rows after the label audit come from the same
+    ``_split_fedavg_eval_report`` — and plans 10 shuffle exchanges and 7
+    broadcast joins: the twin's 9 and 5, less the CSV dedup shuffle, plus
+    the coverage guard's two of each.
     """
     fixture = spark.read.parquet(TWIN_FIXTURE).select(
         "img_id", "variant", "pix_sum", "n_pix"
@@ -660,136 +727,36 @@ def chexpert_twin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "img_id",
         "left_anti",
     ).agg(F.count(F.lit(1)).alias("n_uncovered"))
-    train = checkpoint_pinned(docs.filter(F.col("is_eval") == 0))
-    f = checkpoint_pinned(
-        train.join(fixture, "img_id").withColumn(
-            "client", F.expr(_TWIN_CLIENT)
-        )
+    # the twin's all_features: both slices' fixture rows, pinned once
+    all_features = checkpoint_pinned(docs.join(fixture, "img_id"))
+    f = all_features.filter(F.col("is_eval") == 0).withColumn(
+        "client", F.expr(_TWIN_CLIENT)
     )
-    # pinned: ef feeds both the eval-row count and the MSE scan — without
-    # the pin each consumer re-scans documents + the fixture (the repo's
-    # two-scan budget, test_no_excessive_table_rescans)
-    ef = checkpoint_pinned(
-        docs.filter(F.col("is_eval") == 1)
-        .join(fixture, "img_id")
-        .select(
-            F.col("variant").cast("long").alias("qc"),
-            F.expr(_TWIN_YC).alias("yc"),
-        )
+    evaluation = all_features.filter(F.col("is_eval") == 1).select(
+        F.col("variant").cast("long").alias("qc"), F.expr(_TWIN_YC).alias("yc")
     )
-
-    n_train_csv = train.agg(
-        (F.count(F.lit(1)) + F.sum("is_dup")).alias("v")
+    # the twin's label audit: train rows plus their planted duplicates,
+    # the duplicated paths, the eval file's rows and the unique paths
+    is_train = F.col("is_eval") == 0
+    n_dup = F.sum(F.when(is_train, F.col("is_dup")))
+    label_audit = docs.agg(
+        (F.count_if(is_train) + n_dup).alias("n_train_csv"),
+        n_dup.alias("n_dup"),
+        F.count_if(~is_train).alias("n_eval_csv"),
+        F.count_if(is_train).alias("n_unique"),
     )
-    n_dups = train.agg(F.sum("is_dup").alias("v"))
-    n_eval_csv = docs.filter(F.col("is_eval") == 1).agg(
-        F.count(F.lit(1)).alias("v")
-    )
-    n_unique = train.agg(F.count(F.lit(1)).alias("v"))
-    n_aug = f.agg(F.count(F.lit(1)).alias("v"))
-
-    per_client = f.groupBy("client").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("pneumonia").cast("long").alias("pneu_pos"),
-    )
-    overlap = (
-        f.groupBy("img_id", "variant")
-        .agg(F.countDistinct("client").alias("nc"))
-        .filter(F.col("nc") > 1)
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    completeness = per_client.crossJoin(
-        F.broadcast(f.agg(F.count(F.lit(1)).alias("total")))
-    ).agg((F.max("total") - F.sum("n_rows")).alias("v"))
-
-    shards = f.select(
-        "client",
-        F.col("variant").cast("long").alias("qc"),
-        F.expr(_TWIN_YC).alias("yc"),
-    )
-    stats = checkpoint_pinned(
-        shards.groupBy("client").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("qc").alias("sx"),
-            F.sum("yc").alias("sy"),
-            F.sum(F.col("qc") * F.col("qc")).alias("sxx"),
-            F.sum(F.col("qc") * F.col("yc")).alias("sxy"),
-        )
-    )
-    from big_data_medical_analysis_spark.operators.udf_surface import (
-        _FEDAVG_SRV_EXPRS as _SRV,
-    )
-    from big_data_medical_analysis_spark.operators.udf_surface import (
-        _fedavg_fit_exprs as _fit,
-    )
-
-    w0m, w1m = _fit(TWIN_LAMBDA)
-    s0m_e, s1m_e, total_e = _SRV
-    server = spark.range(1).selectExpr("0.0 AS s0", "0.0 AS s1")
-    srv_rounds = []
-    for _ in range(TWIN_N_ROUNDS):
-        fits = stats.crossJoin(F.broadcast(server)).selectExpr(
-            "client", "n", w0m, w1m
-        )
-        srv = fits.selectExpr(s0m_e, s1m_e, total_e)
-        srv_rounds.append(srv)
-        server = srv.selectExpr(
-            "CAST(s0m AS DOUBLE) / 1000000.0 AS s0",
-            "CAST(s1m AS DOUBLE) / 1000000.0 AS s1",
-        )
-    final = srv_rounds[-1].select("s0m", "s1m")
-    mse = (
-        ef.crossJoin(F.broadcast(final))
-        .select(
-            (
-                F.col("yc").cast("double")
-                - (F.col("s0m") + F.col("s1m") * F.col("qc")) / 1e6
-            ).alias("resid_micro")
-        )
-        .agg(
-            F.round(
-                F.avg(F.pow(F.col("resid_micro") / 1e6, F.lit(2))), 6
-            ).alias("v")
-        )
-    )
-
-    neg1 = F.lit(-1)
-    parts = [
-        _metric_rows(n_train_csv, "ingest", neg1, ("n_train_csv_rows", F.col("v"))),
-        _metric_rows(n_dups, "ingest", neg1, ("n_dup_paths", F.col("v"))),
-        _metric_rows(n_eval_csv, "ingest", neg1, ("n_eval_csv_rows", F.col("v"))),
-        _metric_rows(n_unique, "dedup", neg1, ("n_unique_images", F.col("v"))),
-        _metric_rows(n_aug, "augment", neg1, ("n_augmented", F.col("v"))),
-        _metric_rows(
-            per_client, "split", F.col("client"),
-            ("n_rows", F.col("n_rows")),
-            ("pneumonia_pos_rows", F.col("pneu_pos")),
+    report = reduce(DataFrame.unionAll, [
+        _report_rows(
+            label_audit,
+            ("ingest", -1, "n_train_csv_rows", F.col("n_train_csv")),
+            ("ingest", -1, "n_dup_paths", F.col("n_dup")),
+            ("ingest", -1, "n_eval_csv_rows", F.col("n_eval_csv")),
+            ("dedup", -1, "n_unique_images", F.col("n_unique")),
         ),
-        _metric_rows(overlap, "audit", neg1, ("overlap_keys", F.col("v"))),
-        _metric_rows(
-            completeness, "audit", neg1, ("completeness_delta", F.col("v"))
-        ),
-    ]
-    for r, srv in enumerate(srv_rounds, start=1):
-        parts.append(
-            _metric_rows(
-                srv, "fedavg", F.lit(r),
-                ("s0m", F.col("s0m")),
-                ("s1m", F.col("s1m")),
-            )
-        )
-    parts.append(
-        _metric_rows(
-            ef.agg(F.count(F.lit(1)).alias("v")),
-            "eval", neg1, ("n_eval_rows", F.col("v")),
-        )
-    )
-    parts.append(_metric_rows(mse, "eval", neg1, ("mse_px2", F.col("v"))))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
+        *_split_fedavg_eval_report(spark, f, _client_stats(f), evaluation),
+    ])
     return (
-        out.crossJoin(F.broadcast(miss))
+        report.crossJoin(F.broadcast(miss))
         .filter(
             F.coalesce(
                 F.assert_true(

@@ -93,6 +93,61 @@ def test_twin_is_deterministic(spark, twin_rows):
     assert rows2 == twin_rows
 
 
+def test_report_rows_one_projection(spark):
+    """The report helper emits a frame's rows in declared order, with the
+    (stage string, idx int, metric string, value double) schema, from ONE
+    copy of the frame's plan: an aggregate with three metrics plans one
+    shuffle exchange, where one union branch per metric plans three."""
+    from big_data_medical_analysis_spark import plans as P
+
+    agg = spark.range(10).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("id").alias("total"),
+        F.max("id").alias("top"),
+    )
+    df = PT._report_rows(
+        agg,
+        ("a", -1, "n", F.col("n")),
+        ("b", F.lit(7), "total", F.col("total")),
+        ("a", 2, "top", F.col("top")),
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("stage", "string"), ("idx", "int"), ("metric", "string"),
+        ("value", "double"),
+    ]
+    # counted on the plan before execution: a finished adaptive plan
+    # prints its initial plan too
+    assert P.exchange_count(df) == 1, P.physical_plan(df)
+    per_metric = (
+        agg.select(F.col("n").cast("double"))
+        .unionAll(agg.select(F.col("total").cast("double")))
+        .unionAll(agg.select(F.col("top").cast("double")))
+    )
+    assert P.exchange_count(per_metric) == 3
+    assert [tuple(r) for r in df.collect()] == [
+        ("a", -1, "n", 10.0), ("b", 7, "total", 45.0), ("a", 2, "top", 9.0),
+    ]
+
+
+def test_twin_job_budget(spark):
+    """Building and collecting the twin launches at most 23 Spark jobs:
+    8 while constructing (label CSV writes and the audited checkpoints)
+    and 15 while executing the report (9 shuffle stages, 5 broadcasts,
+    the result). Per-metric union branches re-run every frame's shuffles
+    and broadcasts once per metric — 38 jobs — and fail here."""
+    sc = spark.sparkContext
+    group = "test_twin_job_budget"
+    sc.setJobGroup(group, "chexpert_pipeline_twin construct + collect")
+    try:
+        rows = PT.chexpert_pipeline_twin(spark, SF).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 23
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 23, len(jobs)
+
+
 def test_feature_pass_matches_bytes_stages(spark):
     """Kernel parity, byte-exact: the twin's fused feature pass must
     report exactly the pixel sums of the bytes the composable
