@@ -226,13 +226,10 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
             for i in range(SIMHASH_BANDS)
         ]
     )
-    # Round 16 (guide §2.4): each banded row carries the FULL band array so
-    # the self-join emits every colliding pair exactly ONCE — at its first
-    # colliding band (`array_position(zip_with(bds_a, bds_b, ==), true) ==
-    # band_idx + 1`; a pair collides in band i iff bds_a[i] = bds_b[i]) —
-    # and the corpus-pair-sized ``distinct()`` exchange disappears
-    # outright. Same move as ``pmh_banded_buckets``'s ``with_bkts`` (wave
-    # 2a): the emitted pair set IS the old DISTINCT set, bit-for-bit.
+    # Each banded row carries the FULL band array so the self-join emits
+    # every colliding pair exactly ONCE, at its first colliding band
+    # (``first_colliding_band``) — no corpus-pair-sized ``distinct()``
+    # exchange. Same move as ``pmh_banded_buckets``'s ``with_bkts``.
     banded = (
         fp.select("doc_id", "lang", "simhash", bands.alias("bds"))
         .select(
@@ -257,16 +254,13 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
         F.col("simhash").alias("sh_b"),
         F.col("bds").alias("bds_b"),
     )
-    first_collision = F.array_position(
-        F.zip_with("bds_a", "bds_b", lambda x, y: x == y), F.lit(True)
-    ) == (F.col("band_idx") + F.lit(1))
     cand = a.join(
         b,
         (F.col("lang") == F.col("lang_b"))
         & (F.col("band_idx") == F.col("band_idx_b"))
         & (F.col("band_val") == F.col("band_val_b"))
         & (F.col("doc_a") < F.col("doc_b"))
-        & first_collision,
+        & first_colliding_band("bds_a", "bds_b", "band_idx"),
     ).select("lang", "doc_a", "doc_b", "sh_a", "sh_b")
     hdist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
     return cand.select("lang", "doc_a", "doc_b", hdist.alias("hdist")).filter(
@@ -598,11 +592,9 @@ def pmh_banded_buckets(
       used to re-tokenize the corpus and shuffle-join it back on doc_id).
     - ``with_bkts``: emit ``bkts`` = the full 4-entry bucket array next to
       the exploded (band, bucket). This is what lets a banded self-join
-      emit each colliding pair EXACTLY ONCE — at its first colliding band,
-      ``array_position(zip_with(bkts_a, bkts_b, ==), true) == band + 1`` —
-      so the corpus-pair-sized ``distinct()`` exchange disappears entirely
-      (the set of emitted pairs is exactly the DISTINCT set, because a
-      pair collides in band b iff bkts_a[b] = bkts_b[b]).
+      emit each colliding pair EXACTLY ONCE, at its first colliding band
+      (``first_colliding_band``), so the corpus-pair-sized ``distinct()``
+      exchange disappears entirely.
 
     Defaults preserve the historical (doc_id, band, bucket) schema
     bit-for-bit (the persisted incremental index depends on it)."""
@@ -658,6 +650,18 @@ def pmh_banded_buckets(
     return exploded.select(
         "doc_id", "band", "bucket", *carried, *(["bkts"] if with_bkts else [])
     )
+
+
+def first_colliding_band(a: str, b: str, band: str) -> Column:
+    """True iff ``band`` (0-based) is the FIRST index at which the band
+    arrays ``a`` and ``b`` agree: ``array_position(zip_with(a, b, ==),
+    true) == band + 1``. A pair collides in band i iff a[i] = b[i], so a
+    banded self-join filtered on this emits each colliding pair exactly
+    once — the pair set IS the DISTINCT set, with no pair-sized
+    ``distinct()`` exchange."""
+    return F.array_position(
+        F.zip_with(a, b, lambda x, y: x == y), F.lit(True)
+    ) == F.col(band) + 1
 
 
 _PMH_SQL = f"""
@@ -1762,12 +1766,12 @@ def intersource_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").alias("sb"),
         F.col("bkts").alias("bkts_b"),
     )
-    first_band = F.array_position(
-        F.zip_with("bkts_a", "bkts_b", lambda x, y: x == y), F.lit(True)
-    ) == F.col("band") + 1
     attributed = (
         left.join(right, ["band", "bucket"])
-        .filter((F.col("doc_a") < F.col("doc_b")) & first_band)
+        .filter(
+            (F.col("doc_a") < F.col("doc_b"))
+            & first_colliding_band("bkts_a", "bkts_b", "band")
+        )
         .select(
             F.least("sa", "sb").alias("src_a"),
             F.greatest("sa", "sb").alias("src_b"),
@@ -1955,9 +1959,6 @@ def governed_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band", "bucket", F.col("doc_id").alias("doc_b"),
         F.col("tsz").alias("tsz_b"), F.col("bkts").alias("bkts_b"),
     )
-    first_band = F.array_position(
-        F.zip_with("bkts_a", "bkts_b", lambda x, y: x == y), F.lit(True)
-    ) == F.col("band") + 1
     pairs = (
         left.join(right, ["band", "bucket"])
         .filter(
@@ -1966,7 +1967,7 @@ def governed_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least("tsz_a", "tsz_b") * 39
                 >= (F.col("tsz_a") + F.col("tsz_b")) * 19
             )
-            & first_band
+            & first_colliding_band("bkts_a", "bkts_b", "band")
         )
         .select("doc_a", "doc_b", "tsz_a", "tsz_b")
     )

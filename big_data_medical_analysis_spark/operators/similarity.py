@@ -26,6 +26,13 @@ norms are *exact* integers; the only float ops are one ``sqrt`` and one
 division per pair — bit-identical across engines (IEEE-754). See
 ``operators/common.py`` for the same convention on money columns.
 
+Exact-integer Lloyd recipe (``lloyd_train`` / ``lloyd_assign``, shared by
+k-means, the SemDeDup/D4 coarse and fine levels, PQ codebooks and the
+streaming SemDeDup maintainer): int64-micro components, integer squared
+distances, argmin ties broken on the centroid id, and ONE IEEE division
+per centroid component (round(sum/count)). DuckDB replays every
+trajectory bit-for-bit from the same four rules.
+
 Reference parity: the reference has no similarity surface at all (its only
 "similarity" is Python set intersection over collected paths,
 ``utils/preprocessing_testing_utils.py:60-80``); this module is mandated by
@@ -53,6 +60,44 @@ NEAR_DUP_COS = 0.25
 def _iscaled(x: Column) -> Column:
     """float component → exact int64 (= round(x·10⁶))."""
     return F.round(x.cast("double") * _SCALE).cast("long")
+
+
+# The exact int64 vector kernels. ``_int_micro`` projects a float vector to
+# int64 micro-units once; the ``_raw`` kernels then work on ALREADY-scaled
+# vectors, so every dot product, squared norm and squared distance below is
+# an exact integer whatever the summation order.
+
+
+def _int_micro(v: Column | str) -> Column:
+    """float vector → exact int64-micro vector (``_iscaled`` per component)."""
+    return F.transform(v, _iscaled)
+
+
+def _int_dot_raw(a: Column | str, b: Column | str) -> Column:
+    """Exact int64 dot of two ALREADY int-scaled vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _int_norm2_raw(a: Column | str) -> Column:
+    """Exact int64 squared norm of an ALREADY int-scaled vector."""
+    return F.aggregate(
+        F.transform(a, lambda x: x * x),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _int_sqdist_raw(a: Column | str, b: Column | str) -> Column:
+    """Exact int64 squared distance of two ALREADY int-scaled vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
 
 
 def int_dot(a: Column, b: Column) -> Column:
@@ -327,24 +372,6 @@ def ann_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_IVF_PROBE_CELLS = 3
 
 
-def _int_dot_raw(a: Column, b: Column) -> Column:
-    """Exact int64 dot of two ALREADY int-scaled vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _int_norm2_raw(a: Column) -> Column:
-    """Exact int64 squared norm of an ALREADY int-scaled vector."""
-    return F.aggregate(
-        F.transform(a, lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 _IVF_SQL = f"""
 WITH scaled AS (
   SELECT vec_id, label,
@@ -405,6 +432,31 @@ WHERE rnk <= {TOP_K}
 """
 
 
+def _label_means(vl: DataFrame, vec: str) -> DataFrame:
+    """(label, cvec): each label cell's exact integer mean of the int64
+    vector column ``vec`` — one explode, one (label, dim) aggregate with
+    one round(sum/count) per component, one regroup, all JVM-side. The
+    IVF coarse quantizer of ``ivf_topk`` and ``ivf_pq_topk``.
+    posexplode_outer + null-filter on the OUTPUT, not posexplode: the
+    plain generator makes Catalyst infer size(vec)>0 and push it to the
+    scan with the scaling transform substituted — re-scaling every vector
+    a second time per row (see common.explode_nonnull_pinned)."""
+    exploded = vl.select(
+        "label", F.posexplode_outer(vec).alias("i", "ix")
+    ).filter(F.col("i").isNotNull())
+    centc = exploded.groupBy("label", "i").agg(
+        F.round(F.sum("ix").cast("double") / F.count(F.lit(1)))
+        .cast("long")
+        .alias("c")
+    )
+    return centc.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "c"))),
+            lambda s: s["c"],
+        ).alias("cvec")
+    )
+
+
 @register("ivf_topk", oracle=_IVF_SQL, category="similarity")
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate top-k: rank coarse cells by probe↔centroid
@@ -432,33 +484,13 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantized_cosine_topk).
     scaled = fan_out(
         read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", F.transform("embedding", _iscaled).alias("iv")
+            "vec_id", "label", _int_micro("embedding").alias("iv")
         ),
         "vec_id",
     ).transform(checkpoint_pinned)
 
-    # centroid build: one explode + two aggregates, all JVM-side.
-    # posexplode_outer + null-filter on the OUTPUT, not posexplode: the
-    # plain generator makes Catalyst infer size(iv)>0 and push it to the
-    # scan with the _iscaled transform substituted — re-scaling every
-    # vector a second time per row (see common.explode_nonnull_pinned).
-    exploded = scaled.select(
-        "label", F.posexplode_outer("iv").alias("i", "ix")
-    ).filter(F.col("i").isNotNull())
-    centc = exploded.groupBy("label", "i").agg(
-        F.round(F.sum("ix").cast("double") / F.count(F.lit(1)))
-        .cast("long")
-        .alias("c")
-    )
-    cent = (
-        centc.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "c"))),
-                lambda s: s["c"],
-            ).alias("cvec")
-        )
-        .select("label", "cvec", _int_norm2_raw(F.col("cvec")).alias("n2c"))
+    cent = _label_means(scaled, "iv").select(
+        "label", "cvec", _int_norm2_raw(F.col("cvec")).alias("n2c")
     )
 
     probes = scaled.filter(F.col("vec_id") < N_PROBES).select(
@@ -560,7 +592,7 @@ def quantize_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pushed-down scale6 > 0 expands the whole derivation inside the scan
     filter."""
     emb = read_table(spark, sf_dir, "embeddings")
-    xi = F.transform(F.col("embedding"), _iscaled)
+    xi = _int_micro("embedding")
     staged = fan_out(
         emb.select("vec_id", "label", xi.alias("xi"))
         .filter(F.exists("xi", lambda v: v != 0))
@@ -643,7 +675,7 @@ def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to once-per-row; (3) the candidate side gets its own barrier so the
     # nested-loop join sees finished q vectors, per-pair work = the dot
     # product alone. The broadcast exchange materializes the probe side.
-    xi = F.transform(F.col("embedding"), _iscaled)
+    xi = _int_micro("embedding")
     staged = fan_out(
         read_table(spark, sf_dir, "embeddings")
         .select("vec_id", xi.alias("xi"))
@@ -656,11 +688,7 @@ def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qdf = staged.select("vec_id", q.alias("q")).withColumn(
         "qn2",
-        F.aggregate(
-            F.transform("q", lambda v: v * v),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
+        _int_norm2_raw("q"),
     )
     probes = F.broadcast(
         qdf.filter(F.col("vec_id") < N_PROBES).select(
@@ -674,11 +702,7 @@ def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q").alias("c_q"),
         F.col("qn2").alias("c_qn2"),
     )
-    qdot = F.aggregate(
-        F.zip_with("p_q", "c_q", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    qdot = _int_dot_raw("p_q", "c_q")
     pairs = probes.join(cands, F.col("cand_id") != F.col("probe_id")).select(
         "probe_id",
         "cand_id",
@@ -751,6 +775,10 @@ def _rp_project_mapper(serialize: bool):
     import numpy as np
     import pandas as pd
 
+    from big_data_medical_analysis_spark.operators.udf_surface import (
+        round_half_away_int,
+    )
+
     signs_t = np.array(rp_sign_matrix(), dtype=np.int64).T  # IN_DIM × OUT_DIM
 
     def _project(batches):
@@ -758,8 +786,7 @@ def _rp_project_mapper(serialize: bool):
             mat = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
-            s = mat * float(_SCALE)
-            iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
+            iv = round_half_away_int(mat * float(_SCALE))
             proj_i = iv @ signs_t  # int64 micro-units, exact
             if serialize:
                 yield pd.DataFrame(
@@ -890,108 +917,86 @@ FROM u{KMEANS_ITERS}"""
 
 def _kmeans_vm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The int64-micro-scaled vector table, scaled ONCE and
-    localCheckpointed: vm is consumed by the init centroids plus twice per
-    Lloyd iteration (assignment + update), and the executed plan re-read
-    parquet and re-ran the scaling transform for each consumer (5 scans at
-    2 iterations — the r8 rescan class). Lloyd's per-iteration pass over
-    the vectors is inherent; re-deriving them per pass is not. At 100 TB:
-    persist(DISK_ONLY) of the scaled table, same trade as the mining
-    baskets."""
+    localCheckpointed: vm is consumed by the init centroids plus once per
+    Lloyd round, and the executed plan otherwise re-reads parquet and
+    re-runs the scaling transform for each consumer (the rescan class).
+    Lloyd's per-round pass over the vectors is inherent; re-deriving them
+    per pass is not. At 100 TB: persist(DISK_ONLY) of the scaled table,
+    same trade as the mining baskets."""
     emb = read_table(spark, sf_dir, "embeddings")
     return emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda y: F.round(y.cast("double") * 1_000_000).cast("long"),
-        ).alias("v"),
+        "vec_id", _int_micro("embedding").alias("v")
     ).transform(checkpoint_pinned)
 
 
-def _argmin_struct(cents_col: str, vec_col: str, id_field: str) -> Column:
-    """MAP-SIDE argmin of a row's vector against a row-local ARRAY of
-    centroid structs (id_field, c): exact int64 squared distance per
-    entry, then ``array_min`` over (d, id) structs — field-by-field
-    struct ordering ties on the centroid id exactly like the historical
-    ``min(struct(d, id))`` / ``row_number`` forms, with identical
-    values. The point is the physical shape (guide §2.3/§2.4): the
-    argmin happens inside the row's own projection, so NO scored
-    (N·k)-row relation exists and NO per-vec_id shuffle (window or
-    partial-aggregate) is needed — assignment becomes a pure map over
-    the vector table with the centroid array attached (1-row broadcast
-    for global codebooks, a per-cell equi-join for cell-gated ones)."""
-    d = lambda c: F.aggregate(  # noqa: E731 — local expression builder
-        F.zip_with(vec_col, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+def lloyd_assign(
+    vm: DataFrame,
+    centroids: DataFrame,
+    keys: tuple[str, ...] = (),
+    broadcast: bool = True,
+) -> DataFrame:
+    """One exact Lloyd assignment pass: every ``vm`` row (vector ``v``)
+    gains the ``cluster`` of its nearest ``(*keys, cluster, c)`` centroid
+    within its own key and that squared distance ``d``; ties break on
+    the cluster id. The codebook is grouped into one sorted cents array
+    per key; ``broadcast`` ships it to every task (global and PQ
+    codebooks) or, when False, equi-joins it on the keys (the cell-gated
+    fine level, whose centroid table grows with the corpus). The argmin
+    is ``array_min`` over (d, cluster) structs inside the row's own
+    projection, so the assignment is a map: no scored N·k relation and
+    no per-vector shuffle."""
+    cents = centroids.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
     )
-    return F.array_min(
+    if broadcast:
+        cents = F.broadcast(cents)
+    joined = vm.join(cents, list(keys)) if keys else vm.crossJoin(cents)
+    m = F.array_min(
         F.transform(
-            cents_col,
+            "cents",
             lambda e: F.struct(
-                d(e["c"]).alias("d"), e[id_field].alias(id_field)
+                _int_sqdist_raw("v", e["c"]).alias("d"),
+                e["cluster"].alias("cluster"),
             ),
         )
     )
-
-
-def _lloyd_assign(vm: DataFrame, centroids: DataFrame) -> DataFrame:
-    """One Lloyd assignment pass: exact integer squared distance of every
-    vector against every centroid, argmin tie-broken on cluster id.
-    Round 16: the centroids arrive as ONE broadcast row holding the
-    sorted (cluster, c) array and the argmin runs inside the row's
-    projection (``_argmin_struct``) — the scored N·k relation and the
-    per-vec_id window shuffle of the r12 form are gone; values are
-    bit-identical (same distances, same (d, cluster) tie-break).
-    Returns (vec_id, cluster, d) for each vector's winning cluster."""
-    carr = centroids.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    m = _argmin_struct("cents", "v", "cluster")
-    return (
-        vm.crossJoin(F.broadcast(carr))
-        .select("vec_id", m.alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.cluster").alias("cluster"),
-            F.col("m.d").alias("d"),
-        )
+    return joined.withColumn("m", m).select(
+        *vm.columns, F.col("m.cluster").alias("cluster"), F.col("m.d").alias("d")
     )
 
 
-def _lloyd_iterations(vm: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """{KMEANS_ITERS} Lloyd rounds from the deterministic first-k init.
-    Returns (centroids, update): the final (cluster, c) centroid arrays
-    and the final iteration's per-(cluster, dim) update rows.
+def lloyd_train(
+    vm: DataFrame,
+    centroids: DataFrame,
+    keys: tuple[str, ...] = (),
+    broadcast: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """{KMEANS_ITERS} exact Lloyd rounds from the given initial
+    ``(*keys, cluster int, c)`` centroids; ``vm`` carries ``(*keys, v)``.
+    Keys are data, not code paths: ``()`` trains one global codebook
+    (kmeans, the SemDeDup coarse cells), ``("s",)`` one codebook per PQ
+    subspace, ``("cell",)`` the hierarchical fine level. Returns
+    ``(centroids, update)``: the final centroids and the final round's
+    per-(*keys, cluster, dim) rows ``(cm, n)``, dim 1-based.
 
-    Round 16: the assignment argmin is map-side (``_argmin_struct``), so
-    each member row still CARRIES its vector into the update aggregate —
-    the per-iteration join back to ``vm`` on vec_id (a second shuffle of
-    the vector table per round at scale) is gone; the only shuffle per
-    round is the map-side-combinable (cluster, dim) mean update."""
-    centroids = vm.filter(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").cast("integer").alias("cluster"), F.col("v").alias("c")
-    )
+    Cost model per round: one ``lloyd_assign`` map (the codebook
+    broadcast, or equi-joined on the cell key), whose member rows carry
+    their vector into the update, so nothing joins back to ``vm``; then
+    ONE map-side-combinable (*keys, cluster, dim) mean aggregate, one
+    round(sum/count) per component, regrouped into centroid arrays. The
+    explode is posexplode_outer + an output null-filter: plain posexplode
+    makes Catalyst infer size(v) > 0 and push it down to the scan with
+    the scaling transform substituted, re-scaling every vector per
+    round."""
     update = None
     for _ in range(KMEANS_ITERS):
-        carr = centroids.agg(
-            F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias(
-                "cents"
-            )
-        )
-        m = _argmin_struct("cents", "v", "cluster")
-        members = (
-            vm.crossJoin(F.broadcast(carr))
-            .withColumn("m", m)
-            .select(F.col("m.cluster").alias("cluster"), "v")
-        )
-        # posexplode_outer + output null-filter: posexplode's inferred
-        # size(v)>0 filter pushes through the join to the embeddings scan
-        # with the int-scaling transform substituted (a full second
-        # per-row scaling pass each iteration — seen in the plan audit)
+        members = lloyd_assign(vm, centroids, keys, broadcast)
         exploded = members.select(
-            "cluster", F.posexplode_outer("v").alias("pos", "val")
+            *keys, "cluster", F.posexplode_outer("v").alias("pos", "val")
         ).filter(F.col("pos").isNotNull())
-        update = exploded.groupBy("cluster", (F.col("pos") + 1).alias("dim")).agg(
+        update = exploded.groupBy(
+            *keys, "cluster", (F.col("pos") + 1).alias("dim")
+        ).agg(
             F.round(
                 F.sum("val").cast("double") / F.count(F.lit(1)).cast("double")
             )
@@ -999,7 +1004,7 @@ def _lloyd_iterations(vm: DataFrame) -> tuple[DataFrame, DataFrame]:
             .alias("cm"),
             F.count(F.lit(1)).cast("long").alias("n"),
         )
-        centroids = update.groupBy("cluster").agg(
+        centroids = update.groupBy(*keys, "cluster").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "cm"))),
                 lambda s: s.cm,
@@ -1014,29 +1019,26 @@ def kmeans_lloyd_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means ({KMEANS_ITERS} Lloyd iterations, k={KMEANS_K},
     deterministic first-k init) with a FULL value oracle — the iterative
     clustering workhorse behind IVF index builds (ivf_topk consumes
-    exactly these centroids) and corpus topic bucketing. Everything is
-    exact: int64-micro components, integer squared distances (any
-    summation order), argmin tie-broken on cluster id, and a single
-    round(sum/count) division per (cluster, dim) — so DuckDB replays the
-    whole trajectory bit-for-bit, the same recipe as fedavg_rounds.
-    Output: the per-dimension final centroids with member counts. (A
-    cluster emptied by reassignment simply drops out on both engines —
-    k-means|| style re-seeding is an init policy, not an operator
-    property.)
+    exactly these centroids) and corpus topic bucketing. Exact by the
+    module's Lloyd recipe, so DuckDB replays the whole trajectory
+    bit-for-bit, the same recipe as fedavg_rounds. Output: the
+    per-dimension final centroids with member counts. (A cluster emptied
+    by reassignment simply drops out on both engines — k-means|| style
+    re-seeding is an init policy, not an operator property.)
 
-    Scale: each iteration is (a) a broadcast of k·dim centroid ints
-    against the vector table — a map-side argmin, no shuffle of vectors —
-    and (b) one map-side-combinable (cluster, dim) aggregate. Iteration
-    count multiplies passes over the data, not shuffle width; at 100 TB
-    you run assignment on a sample for the first iterations and full-pass
-    only the last (standard practice), which changes this plan's input,
-    not its shape. (Round 12: the vm scaling, assignment pass, and Lloyd
-    loop are factored into `_kmeans_vm`/`_lloyd_assign`/`_lloyd_iterations`
-    — shared with ``semdedup_prune_stats`` — with byte-identical
-    expressions; re-verified per the registry's code-changed convention.)
+    Scale: ``lloyd_train`` with no keys — per round a broadcast of k·dim
+    centroid ints against the vector table (a map-side argmin, no
+    shuffle of vectors) and one map-side-combinable (cluster, dim)
+    aggregate. Iteration count multiplies passes over the data, not
+    shuffle width; at 100 TB you run assignment on a sample for the
+    first iterations and full-pass only the last (standard practice),
+    which changes this plan's input, not its shape.
     """
     vm = _kmeans_vm(spark, sf_dir)
-    _, update = _lloyd_iterations(vm)
+    init = vm.filter(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").cast("integer").alias("cluster"), F.col("v").alias("c")
+    )
+    _, update = lloyd_train(vm, init)
     return update.select(
         "cluster",
         (F.col("dim") - 1).cast("integer").alias("dim_idx"),
@@ -1056,28 +1058,19 @@ def kmeans_lloyd_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this per-corpus exactly as the paper does.
 SEMDEDUP_TAU = 0.25
 
-# Round 13 (VERDICT r12 task 2): the SemDeDup/D4 cluster count is DERIVED
-# from the corpus's exact row count — k = max(KMEANS_K, ceil(N / width)) —
-# so the within-cluster cosine screen's Σ|cluster|² term stays
-# width-bounded (≈ N·width, linear) as the corpus grows, instead of m²
-# at a fixed k.
-#
-# Round 14 (VERDICT r13 task 1): the ASSIGNMENT is now hierarchical too.
-# Flat Lloyd scored every vector against all k = ceil(N/width) centroids —
-# O(N·k) = O(N²/width) flops with a corpus-proportional centroid
-# broadcast, the last super-linear term in the selection family. The
-# two-level (IVF-pattern) trajectory below kills it: a DERIVED
-# kc = ceil(sqrt(k)) coarse codebook is Lloyd-trained first and routes
-# every vector to ONE cell (O(N·kc) flops against a broadcast-sized
-# table), then each cell trains its own derived-k fine clusters
-# (kf = ceil(|cell|/width)) and vectors score ONLY against their cell's
-# centroids via a (cell)-keyed equi-join — never a corpus-proportional
-# broadcast. Balanced-cell flops: coarse N·kc + fine Σ|cell|²/width
-# ≈ 2·N·sqrt(N/width) = O(N·sqrt(k)), the verdict-ordered bound. Both
-# levels reuse the exact Lloyd algebra (int64 distances, argmin ties on
-# id, one round(sum/count) per dim), every derived count (k, kc, kf) is
-# 1-row/K-row integer algebra off exact counts (sqrt is IEEE-754
-# CORRECTLY ROUNDED — unlike log — and belt-and-braces integer-corrected
+# The SemDeDup/D4 cluster count is DERIVED from the corpus's exact row
+# count — k = max(KMEANS_K, ceil(N / width)) — so the within-cluster cosine
+# screen's Σ|cluster|² term stays width-bounded (≈ N·width, linear) as the
+# corpus grows. The assignment is two-level (the IVF pattern): a derived
+# kc = ceil(sqrt(k)) coarse codebook routes every vector to ONE cell
+# (O(N·kc) flops against a broadcast-sized table), then each cell trains
+# its own kf = ceil(|cell|/width) fine clusters and vectors score ONLY
+# against their cell's centroids via a cell-keyed equi-join — never a
+# corpus-proportional broadcast. Balanced-cell flops: coarse N·kc + fine
+# Σ|cell|²/width ≈ 2·N·sqrt(N/width) = O(N·sqrt(k)), against flat Lloyd's
+# O(N·k) = O(N²/width). Both levels are ``lloyd_train``; every derived
+# count (k, kc, kf) is 1-row/K-row integer algebra off exact counts (sqrt
+# is IEEE-754 CORRECTLY ROUNDED — unlike log — and integer-corrected
 # anyway), so DuckDB replays the whole two-level trajectory bit-for-bit.
 SEMDEDUP_TARGET_WIDTH = 128
 # Global cluster id = cell * SHIFT + fine: fine counts are bounded by
@@ -1107,58 +1100,14 @@ def _hier_kc_df(vm: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_assign_agg(
-    vm: DataFrame, centroids: DataFrame, keep_v: bool = False
-) -> DataFrame:
-    """One Lloyd assignment pass in MAP-SIDE-COMBINABLE form: exact
-    integer squared distance of every vector against every (broadcast)
-    centroid, then argmin as min(struct(d, cluster)) grouped by vec_id —
-    struct ordering compares (d, cluster) field-by-field, so ties break
-    on cluster id exactly like ``_lloyd_assign``'s row_number, with
-    identical values. The difference is the physical shape: the
-    row_number form shuffles all N·k scored rows into a per-vec_id
-    window; this form partial-aggregates the argmin map-side, so the
-    shuffle carries ~N slim rows regardless of k — the shape that
-    matters once counts derive from the corpus. Used by the
-    hierarchical SemDeDup/D4 path's COARSE level (Lloyd over
-    kc = ceil(sqrt(k)) cells, then the one routing pass).
-
-    Round 16 (optimization): the argmin is now FULLY map-side
-    (``_argmin_struct`` over a 1-row broadcast centroid ARRAY) — the
-    r14 form still materialized the scored N·k relation and shuffled
-    ~N partial-argmin rows through a groupBy(vec_id) exchange; this
-    form shuffles NOTHING (assignment is a projection), with
-    bit-identical values (same int64 distances, same (d, cluster)
-    struct tie-break). ``keep_v`` additionally carries the vector on
-    the member row so the Lloyd update aggregates it directly instead
-    of re-joining ``vm`` on vec_id — one fewer shuffle of the vector
-    table per iteration (guide §2.4)."""
-    carr = centroids.agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
-    )
-    m = _argmin_struct("cents", "v", "cluster")
-    out = vm.crossJoin(F.broadcast(carr)).withColumn("m", m)
-    cols = [
-        "vec_id",
-        F.col("m.cluster").alias("cluster"),
-        F.col("m.d").alias("d"),
-    ]
-    if keep_v:
-        cols.append(F.col("v"))
-    return out.select(*cols)
-
-
 def _hier_coarse_centroids(vm: DataFrame) -> DataFrame:
-    """COARSE level of the two-level trajectory: {KMEANS_ITERS} Lloyd
-    rounds over kc = ceil(sqrt(k)) cells from the deterministic first-kc
-    init (init filter joins the broadcast 1-row kc frame). Same exact
-    algebra as ``_lloyd_iterations`` with the map-side-combinable
-    ``_lloyd_assign_agg`` assignment; returns (cluster int, c
-    array<long>) in the assign helper's column convention — the caller
-    renames cluster -> cell. The coarse table is kc·dim ints —
-    broadcast-sized at any corpus (kc ∝ sqrt(N/width): ~28k cells x 64
-    dims ≈ 14 MB at 1e11 docs)."""
-    centroids = (
+    """COARSE level of the two-level trajectory: ``lloyd_train`` with no
+    keys over kc = ceil(sqrt(k)) cells from the deterministic first-kc
+    init (the init filter joins the broadcast 1-row kc frame). Returns
+    (cluster int, c); callers rename cluster -> cell. The coarse table
+    is kc·dim ints — broadcast-sized at any corpus (kc ∝ sqrt(N/width):
+    ~28k cells x 64 dims ≈ 14 MB at 1e11 docs)."""
+    init = (
         vm.crossJoin(F.broadcast(_hier_kc_df(vm)))
         .filter(F.col("vec_id") < F.col("kc"))
         .select(
@@ -1166,77 +1115,20 @@ def _hier_coarse_centroids(vm: DataFrame) -> DataFrame:
             F.col("v").alias("c"),
         )
     )
-    for _ in range(KMEANS_ITERS):
-        # keep_v: the member row carries its vector into the update —
-        # no join back to vm (round 16, guide §2.4)
-        members = _lloyd_assign_agg(vm, centroids, keep_v=True).select(
-            "cluster", "v"
-        )
-        exploded = members.select(
-            "cluster", F.posexplode_outer("v").alias("pos", "val")
-        ).filter(F.col("pos").isNotNull())
-        update = exploded.groupBy("cluster", (F.col("pos") + 1).alias("dim")).agg(
-            F.round(
-                F.sum("val").cast("double") / F.count(F.lit(1)).cast("double")
-            )
-            .cast("long")
-            .alias("cm"),
-        )
-        centroids = update.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cm"))),
-                lambda s: s.cm,
-            ).alias("c")
-        )
-    return centroids
-
-
-def _hier_fine_assign(
-    vr: DataFrame, fc: DataFrame, keep_v: bool = False
-) -> DataFrame:
-    """One FINE assignment pass, cell-gated: vectors join their own
-    cell's centroids on the cell key (an equi-join — a shuffle join at
-    scale, NEVER a corpus-proportional broadcast), exact integer squared
-    distance, argmin tie-broken on fine id exactly like the coarse
-    level's (d, cluster) struct. Returns (vec_id, cell, fine, d).
-
-    Round 16 (optimization): the cell's centroids are GROUPED into one
-    (cell, cents-array) row before the join, and the argmin runs inside
-    the joined row's projection (``_argmin_struct``) — the r14 form
-    expanded |cell|·kf scored rows and shuffled ~N partial-argmin rows
-    through a groupBy(vec_id, cell) exchange; this form joins one
-    array row per cell (same bytes as the kf rows, kf is width-bounded
-    by construction) and shuffles nothing after the join. Values are
-    bit-identical (same distances, same (d, fine) tie-break). A hot
-    cell skews the join's shuffle partitions; AQE's skew-join split
-    handles that at runtime (the same answer as every banded self-join
-    in the dedup family)."""
-    fcarr = fc.groupBy("cell").agg(
-        F.array_sort(F.collect_list(F.struct("fine", "c"))).alias("cents")
-    )
-    m = _argmin_struct("cents", "v", "fine")
-    out = vr.join(fcarr, "cell").withColumn("m", m)
-    cols = [
-        "vec_id",
-        "cell",
-        F.col("m.fine").alias("fine"),
-        F.col("m.d").alias("d"),
-    ]
-    if keep_v:
-        cols.append(F.col("v"))
-    return out.select(*cols)
+    return lloyd_train(vm, init)[0]
 
 
 def _hier_fine_centroids(vr: DataFrame) -> DataFrame:
-    """FINE level: per routed cell, kf = max(1, ceil(|cell|/width))
-    clusters from the deterministic first-kf-by-vec_id init (row_number
-    within cell joined against the broadcast kc-row kf frame), then
-    {KMEANS_ITERS} cell-gated Lloyd rounds — assignment via
-    ``_hier_fine_assign``, update as the usual one round(sum/count)
-    division per (cell, fine, dim). Returns (cell, fine int, c). Every
-    non-empty cell keeps >= 1 fine centroid at every round (its members
-    are assigned among its own centroids), so no vector is ever
-    orphaned."""
+    """FINE level over the routed ``(vec_id, cell, v)`` table: per cell,
+    kf = max(1, ceil(|cell|/width)) clusters from the deterministic
+    first-kf-by-vec_id init (row_number within cell joined against the
+    broadcast kc-row kf frame), then ``lloyd_train`` keyed on the cell
+    and equi-joined, never broadcast. Returns (cell, cluster int, c).
+    Every non-empty cell keeps >= 1 fine centroid at every round (its
+    members are assigned among its own centroids), so no vector is ever
+    orphaned. A hot cell skews the join's shuffle partitions; AQE's
+    skew-join split handles that at runtime (the same answer as every
+    banded self-join in the dedup family)."""
     kf = (
         vr.groupBy("cell")
         .agg(F.count(F.lit(1)).cast("long").alias("nc"))
@@ -1247,74 +1139,45 @@ def _hier_fine_centroids(vr: DataFrame) -> DataFrame:
         )
     )
     wn = W.partitionBy("cell").orderBy("vec_id")
-    fc = (
+    init = (
         vr.withColumn("rn", F.row_number().over(wn))
         .join(F.broadcast(kf), "cell")
         .filter(F.col("rn") <= F.col("kf"))
         .select(
             "cell",
-            (F.col("rn") - 1).cast("integer").alias("fine"),
+            (F.col("rn") - 1).cast("integer").alias("cluster"),
             F.col("v").alias("c"),
         )
     )
-    for _ in range(KMEANS_ITERS):
-        # keep_v: the member row carries its vector into the update —
-        # no join back to vr (round 16, guide §2.4)
-        members = _hier_fine_assign(vr, fc, keep_v=True).select(
-            "cell", "fine", "v"
-        )
-        exploded = members.select(
-            "cell", "fine", F.posexplode_outer("v").alias("pos", "val")
-        ).filter(F.col("pos").isNotNull())
-        update = exploded.groupBy(
-            "cell", "fine", (F.col("pos") + 1).alias("dim")
-        ).agg(
-            F.round(
-                F.sum("val").cast("double") / F.count(F.lit(1)).cast("double")
-            )
-            .cast("long")
-            .alias("cm"),
-        )
-        fc = update.groupBy("cell", "fine").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cm"))),
-                lambda s: s.cm,
-            ).alias("c")
-        )
-    return fc
+    return lloyd_train(vr, init, ("cell",), broadcast=False)[0]
 
 
 def _hier_assign(vm: DataFrame) -> DataFrame:
     """The full two-level assignment consumed by the SemDeDup screen:
     train the coarse codebook, route every vector to its cell (one
-    broadcast argmin pass), pin the routed (vec_id, cell, v) table —
+    broadcast argmin pass whose rows carry their vector, so nothing
+    joins back to vm), pin the routed (vec_id, cell, v) table —
     it feeds the kf counts, the fine init, two fine Lloyd rounds and the
     final assignment (6 consumers; at 100 TB this is persist(DISK_ONLY),
     the ``_kmeans_vm`` trade) — then train the fine centroids and emit
     the final cell-gated argmin as (vec_id, cluster long, d) with the
     global id cell * {SEMDEDUP_CELL_SHIFT} + fine."""
-    # keep_v: the routing pass carries each vector on its routed row, so
-    # vr needs NO join back to vm (round 16 — one fewer shuffle of the
-    # vector table ahead of the pin; the routing argmin itself is a pure
-    # projection over the broadcast coarse codebook)
-    route = _lloyd_assign_agg(vm, _hier_coarse_centroids(vm), keep_v=True)
+    route = lloyd_assign(vm, _hier_coarse_centroids(vm))
     vr = checkpoint_pinned(
         route.select("vec_id", F.col("cluster").alias("cell"), "v")
     )
-    fa = _hier_fine_assign(vr, _hier_fine_centroids(vr))
-    # In-plan id-collision guard (ADVICE r14): the global id packs
-    # (cell, fine) as cell * SHIFT + fine, sound only while
-    # fine < SEMDEDUP_CELL_SHIFT — i.e. a single routed cell stays under
-    # 2^20 * width ≈ 134M vectors. Implausible but possible at 100 TB
-    # with a degenerate embedding space; before this guard the bound
-    # lived only in a comment and an overflowing fine would SILENTLY
-    # merge clusters across adjacent cells, corrupting the width-bounded
-    # screen. Per-row assert_true folded into the id expression (coalesce
-    # of its NULL keeps the value bit-identical and unprunable) — strictly
-    # cheaper than the max(fine) aggregate form: no extra pass, no
-    # barrier, and it subsumes the max() check row-by-row.
+    fa = lloyd_assign(vr, _hier_fine_centroids(vr), ("cell",), broadcast=False)
+    # In-plan id-collision guard: the global id packs (cell, fine) as
+    # cell * SHIFT + fine, sound only while fine < SEMDEDUP_CELL_SHIFT —
+    # i.e. a single routed cell stays under 2^20 * width ≈ 134M vectors.
+    # Implausible but possible at 100 TB with a degenerate embedding
+    # space; an overflowing fine id would SILENTLY merge clusters across
+    # adjacent cells, corrupting the width-bounded screen. Per-row
+    # assert_true folded into the id expression (coalesce of its NULL
+    # keeps the value bit-identical and unprunable) — strictly cheaper
+    # than a max(fine) aggregate: no extra pass, no barrier.
     guard = F.assert_true(
-        F.col("fine") < F.lit(SEMDEDUP_CELL_SHIFT),
+        F.col("cluster") < F.lit(SEMDEDUP_CELL_SHIFT),
         F.lit(
             "hierarchical fine id reached SEMDEDUP_CELL_SHIFT (2^20): a"
             " hot cell exceeded ~134M routed vectors and packed cluster"
@@ -1325,7 +1188,7 @@ def _hier_assign(vm: DataFrame) -> DataFrame:
         "vec_id",
         (
             F.col("cell").cast("long") * SEMDEDUP_CELL_SHIFT
-            + F.col("fine")
+            + F.col("cluster")
             + F.coalesce(guard.cast("long"), F.lit(0).cast("long"))
         ).alias("cluster"),
         "d",
@@ -1612,11 +1475,7 @@ def _semdedup_screen(
     ranked = assign.withColumn("r", F.row_number().over(wr)).select(
         "vec_id", "cluster", "r"
     )
-    n2 = F.aggregate(
-        F.transform("v", lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    n2 = _int_norm2_raw("v")
     normed = vm.select("vec_id", "v", n2.alias("n2"))
     with_vec = ranked.join(normed, "vec_id")
     # fan_out side a: at oracle scale the derived k is small (4), so a keyed
@@ -1637,11 +1496,7 @@ def _semdedup_screen(
         F.col("v").alias("v_b"),
         F.col("n2").alias("n2_b"),
     )
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    dot = _int_dot_raw("v_a", "v_b")
     pruned = (
         a.join(
             F.broadcast(b),
@@ -1934,8 +1789,13 @@ def _sign_lsh_kernel(tables: int, bits: int):
     where margins is N x tables x bits exact int64 dot(iv, plane) over
     the int64-micro vectors and bucket t sets bit r iff margin[t, r] >= 0.
     Nested (not module-level) so the mapInPandas closure pickles by value
-    and workers never import this module."""
+    and workers never import this module (only ``udf_surface``, for the
+    shared half-away rounding)."""
     import numpy as np
+
+    from big_data_medical_analysis_spark.operators.udf_surface import (
+        round_half_away_int,
+    )
 
     planes = ann_sign_matrix()
     assert tables * bits <= len(planes), (tables, bits)
@@ -1944,8 +1804,7 @@ def _sign_lsh_kernel(tables: int, bits: int):
 
     def kernel(embeddings):
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in embeddings])
-        s = mat * float(_SCALE)
-        iv = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
+        iv = round_half_away_int(mat * float(_SCALE))
         margins = (iv @ planes_t).reshape(len(mat), tables, bits)
         return margins, (margins >= 0).astype(np.int64) @ weights
 
@@ -2234,7 +2093,7 @@ def ann_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQ_SUBSPACES = 4
 PQ_SUB_DIM = 16  # PQ_SUBSPACES * PQ_SUB_DIM == _EMB_DIM
 PQ_K = 4
-PQ_ITERS = 2
+PQ_ITERS = KMEANS_ITERS  # lloyd_train runs KMEANS_ITERS rounds for every codebook
 
 
 def _pq_train_sql() -> str:
@@ -2315,29 +2174,15 @@ GROUP BY 1, 2"""
     )
 
 
-def _pq_sqdist() -> Column:
-    """Exact int64 squared distance between subvector ``sv`` and codebook
-    entry ``c`` (column names fixed by convention)."""
-    return F.aggregate(
-        F.zip_with("sv", "c", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_intvecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id → exact int64-micro full vector (column ``v``)."""
     return read_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda y: F.round(y.cast("double") * _SCALE).cast("long"),
-        ).alias("v"),
+        "vec_id", _int_micro("embedding").alias("v")
     )
 
 
 def _pq_subvectors(vm: DataFrame) -> DataFrame:
-    """Explode each int vector into {PQ_SUBSPACES} subvectors (s, sv) —
+    """Explode each int vector into {PQ_SUBSPACES} subvectors (s, v) —
     checkpoint-pinned because training joins it once per iteration."""
     return vm.select(
         "vec_id",
@@ -2348,81 +2193,68 @@ def _pq_subvectors(vm: DataFrame) -> DataFrame:
                     for s in range(PQ_SUBSPACES)
                 ]
             )
-        ).alias("s", "sv"),
+        ).alias("s", "v"),
     ).transform(checkpoint_pinned)
 
 
 def _pq_train(svm: DataFrame) -> DataFrame:
-    """{PQ_ITERS} Lloyd iterations per subspace in ONE pass each (the
-    subspace key is data, not a loop): broadcast-argmin assign, exact
-    int64 (s, cluster, dim) mean update, rounded once per component.
-    Returns the final codebook (s, cluster, c)."""
-    centroids = svm.filter(F.col("vec_id") < PQ_K).select(
-        "s",
-        F.col("vec_id").cast("integer").alias("cluster"),
-        F.col("sv").alias("c"),
+    """All {PQ_SUBSPACES} codebooks in ONE ``lloyd_train`` pass per round
+    (the subspace key is data, not a loop) from the first-{PQ_K} init;
+    each codebook is PQ_K·dim ints, so it broadcasts. Returns the final
+    codebook (s, cluster, c)."""
+    init = svm.filter(F.col("vec_id") < PQ_K).select(
+        "s", F.col("vec_id").cast("integer").alias("cluster"), F.col("v").alias("c")
     )
-    for _ in range(PQ_ITERS):
-        # Round 16: the per-subspace codebook is grouped into ONE
-        # (s, cents-array) row and the argmin runs inside the joined
-        # row's projection (``_argmin_struct``) — the r7 form expanded
-        # N·PQ_K scored rows and shuffled them through a per-(vec_id, s)
-        # window, then joined back to svm for the update; both shuffles
-        # are gone (the member row carries sv), values bit-identical.
-        carr = _pq_codebook_cells(centroids)
-        m = _argmin_struct("cents", "sv", "cluster")
-        members = (
-            svm.join(F.broadcast(carr), "s")
-            .withColumn("m", m)
-            .select("s", F.col("m.cluster").alias("cluster"), "sv")
-        )
-        # posexplode_outer + null-filter: same inferred-generator-filter
-        # dodge as kmeans_lloyd_centroids (size(sv)>0 would re-run the
-        # slice/scale chain at the scan)
-        exploded = members.select(
-            "s", "cluster", F.posexplode_outer("sv").alias("pos", "val")
-        ).filter(F.col("pos").isNotNull())
-        update = exploded.groupBy(
-            "s", "cluster", (F.col("pos") + 1).alias("dim")
-        ).agg(
-            F.round(
-                F.sum("val").cast("double") / F.count(F.lit(1)).cast("double")
-            )
-            .cast("long")
-            .alias("cm")
-        )
-        centroids = update.groupBy("s", "cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cm"))),
-                lambda st: st.cm,
-            ).alias("c")
-        )
-    return centroids
+    return lloyd_train(svm, init, ("s",))[0]
 
 
-def _pq_codebook_cells(centroids: DataFrame) -> DataFrame:
-    """Group a (s, cluster, c) codebook into one (s, cents) row per
-    subspace — the array form ``_argmin_struct`` consumes. PQ_K·dim ints
-    per subspace: broadcast-sized by construction."""
-    return centroids.groupBy("s").agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("cents")
+def _pq_adc_tables(
+    svm: DataFrame, centroids: DataFrame, is_probe: Column, is_cand: Column
+) -> tuple[DataFrame, DataFrame]:
+    """The ADC scan's two inputs: the candidates' PQ codes (cand_id, s,
+    cluster) — the encode pass, ties on cluster id — and each probe's
+    exact lookup table (probe_id, s, cluster, pd) of subvector→centroid
+    squared distances, P·{PQ_SUBSPACES}·{PQ_K} rows."""
+    codes = lloyd_assign(svm.filter(is_cand), centroids, ("s",)).select(
+        F.col("vec_id").alias("cand_id"), "s", "cluster"
     )
-
-
-def _pq_assign(svm: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Encode: per (vector, subspace) the nearest final-codebook entry —
-    (vec_id, s, cluster, d), ties on cluster id. Round 16: map-side
-    argmin over the grouped codebook array (no scored N·PQ_K relation,
-    no per-(vec_id, s) window shuffle), values bit-identical."""
-    m = _argmin_struct("cents", "sv", "cluster")
-    return (
-        svm.join(F.broadcast(_pq_codebook_cells(centroids)), "s")
-        .withColumn("m", m)
+    lut = (
+        svm.filter(is_probe)
+        .join(F.broadcast(centroids), "s")
         .select(
-            "vec_id",
+            F.col("vec_id").alias("probe_id"),
             "s",
-            F.col("m.cluster").alias("cluster"),
-            F.col("m.d").alias("d"),
+            "cluster",
+            _int_sqdist_raw("v", "c").alias("pd"),
+        )
+    )
+    return codes, lut
+
+
+def _adc_topk_exact(adc: DataFrame, vm: DataFrame) -> DataFrame:
+    """Top-{PQ_ADC_K} of an ADC-scored (probe_id, cand_id, adc_d)
+    relation per probe (ties on cand_id), with the EXACT probe→candidate
+    squared distance ``true_d`` recomputed for the winners only — two key
+    joins against the (vec_id, v) int vectors."""
+    wk = W.partitionBy("probe_id").orderBy("adc_d", "cand_id")
+    tk = (
+        adc.withColumn("rnk", F.row_number().over(wk))
+        .filter(F.col("rnk") <= PQ_ADC_K)
+        .select("probe_id", F.col("rnk").cast("integer").alias("rnk"),
+                "cand_id", "adc_d")
+    )
+    return (
+        tk.join(
+            vm.select(F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")),
+            "probe_id",
+        )
+        .join(
+            vm.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")),
+            "cand_id",
+        )
+        .select(
+            "probe_id", "rnk", "cand_id", "adc_d",
+            _int_sqdist_raw("pv", "cv").alias("true_d"),
         )
     )
 
@@ -2459,7 +2291,7 @@ def pq_codebook_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is data, not a loop), which is exactly how PQ trains at 100 TB.
     """
     svm = _pq_subvectors(_pq_intvecs(spark, sf_dir))
-    enc = _pq_assign(svm, _pq_train(svm))
+    enc = lloyd_assign(svm, _pq_train(svm), ("s",))
     return enc.groupBy(
         F.col("s").cast("integer").alias("subspace"), "cluster"
     ).agg(
@@ -2557,57 +2389,19 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     svm = _pq_subvectors(vm)
     centroids = _pq_train(svm)
     is_probe = (F.col("vec_id") % PQ_PROBE_MOD) == PQ_PROBE_RES
-    codes = _pq_assign(svm.filter(~is_probe), centroids).select(
-        F.col("vec_id").alias("cand_id"), "s", "cluster"
-    )
-    lut = (
-        svm.filter(is_probe)
-        .join(F.broadcast(centroids), "s")
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            "s",
-            "cluster",
-            _pq_sqdist().alias("pd"),
-        )
-    )
+    codes, lut = _pq_adc_tables(svm, centroids, is_probe, ~is_probe)
     adc = (
         codes.join(F.broadcast(lut), ["s", "cluster"])
         .groupBy("probe_id", "cand_id")
         .agg(F.sum("pd").alias("adc_d"))
     )
-    wk = W.partitionBy("probe_id").orderBy("adc_d", "cand_id")
-    tk = (
-        adc.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= PQ_ADC_K)
-        .select("probe_id", F.col("rnk").cast("integer").alias("rnk"),
-                "cand_id", "adc_d")
-    )
-    true_d = F.aggregate(
-        F.zip_with("pv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        tk.join(
-            vm.select(F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")),
-            "probe_id",
-        )
-        .join(
-            vm.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")),
-            "cand_id",
-        )
-        .select(
-            "probe_id", "rnk", "cand_id", "adc_d", true_d.alias("true_d")
-        )
-        .withColumn(
-            "adc_ratio",
-            F.when(F.col("true_d") == 0, F.lit(None).cast("double")).otherwise(
-                F.round(
-                    F.col("adc_d").cast("double") / F.col("true_d").cast("double"),
-                    6,
-                )
-            ),
-        )
+    return _adc_topk_exact(adc, vm).withColumn(
+        "adc_ratio",
+        F.when(F.col("true_d") == 0, F.lit(None).cast("double")).otherwise(
+            F.round(
+                F.col("adc_d").cast("double") / F.col("true_d").cast("double"), 6
+            )
+        ),
     )
 
 
@@ -2722,7 +2516,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     vml = fan_out(
         read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", F.transform("embedding", _iscaled).alias("v")
+            "vec_id", "label", _int_micro("embedding").alias("v")
         ),
         "vec_id",
     ).transform(checkpoint_pinned)
@@ -2731,28 +2525,11 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_probe = (F.col("vec_id") % PQ_PROBE_MOD) == PQ_PROBE_RES
 
     # coarse quantizer: per-label integer mean centroids (ivf_topk recipe)
-    exploded = vml.select(
-        "label", F.posexplode_outer("v").alias("i", "ix")
-    ).filter(F.col("i").isNotNull())
-    centc = exploded.groupBy("label", "i").agg(
-        F.round(F.sum("ix").cast("double") / F.count(F.lit(1)))
-        .cast("long")
-        .alias("c")
-    )
-    cent = centc.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))),
-            lambda s: s["c"],
-        ).alias("cvec")
-    )
+    cent = _label_means(vml, "v")
     probes = vml.filter(is_probe).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
-    cell_d = F.aggregate(
-        F.zip_with("pv", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    cell_d = _int_sqdist_raw("pv", "cvec")
     cellsc = probes.crossJoin(F.broadcast(cent)).select(
         "probe_id", "label", cell_d.alias("cd")
     )
@@ -2772,58 +2549,18 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
         ).select("probe_id", "cand_id")
     )
-    codes = _pq_assign(svm.filter(~is_probe), centroids).select(
-        F.col("vec_id").alias("cand_id"), "s", "cluster"
-    )
-    lut = (
-        svm.filter(is_probe)
-        .join(F.broadcast(centroids), "s")
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            "s",
-            "cluster",
-            _pq_sqdist().alias("pd"),
-        )
-    )
+    codes, lut = _pq_adc_tables(svm, centroids, is_probe, ~is_probe)
     adc = (
         gated.join(codes, "cand_id")
         .join(F.broadcast(lut), ["probe_id", "s", "cluster"])
         .groupBy("probe_id", "cand_id")
         .agg(F.sum("pd").alias("adc_d"))
     )
-    wk = W.partitionBy("probe_id").orderBy(F.asc("adc_d"), F.asc("cand_id"))
-    tk = (
-        adc.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= PQ_ADC_K)
-        .select(
-            "probe_id",
-            F.col("rnk").cast("integer").alias("rnk"),
-            "cand_id",
-            "adc_d",
-        )
-    )
     scanstat = gated.groupBy("probe_id").agg(
         F.count(F.lit(1)).alias("n_gated")
     )
-    true_d = F.aggregate(
-        F.zip_with("pv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        tk.join(
-            vml.select(F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")),
-            "probe_id",
-        )
-        .join(
-            vml.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")),
-            "cand_id",
-        )
-        .join(scanstat, "probe_id")
-        .select(
-            "probe_id", "rnk", "cand_id", "adc_d",
-            true_d.alias("true_d"), "n_gated",
-        )
+    return _adc_topk_exact(adc, vml).join(scanstat, "probe_id").select(
+        "probe_id", "rnk", "cand_id", "adc_d", "true_d", "n_gated"
     )
 
 
@@ -3010,20 +2747,10 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
         )
     )
-    vm = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda y: F.round(y.cast("double") * _SCALE).cast("long"),
-        ).alias("v"),
-    )
+    vm = emb.select("vec_id", _int_micro("embedding").alias("v"))
     is_probe = F.expr(_ra_probe_pred())
     is_cand = F.expr(_ANN_INDEX)
-    n2 = F.aggregate(
-        F.transform("v", lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    n2 = _int_norm2_raw("v")
     normed = checkpoint_pinned(vm.select("vec_id", "v", n2.alias("n2")))
     probes = F.broadcast(
         normed.filter(is_probe).select(
@@ -3037,11 +2764,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("n2").alias("cn2"),
     )
-    int_dot_vv = F.aggregate(
-        F.zip_with("pv", "cv", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    int_dot_vv = _int_dot_raw("pv", "cv")
     # One scoring pass carries BOTH metrics; reused by the truth ranks and
     # the LSH rerank join, so it is pinned. Round 16 (guide §1.2 per-task
     # work): ONE dot HOF per pair feeds both metrics through the exact
@@ -3104,19 +2827,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- PQ/ADC tier: LUT-summed distances over the encoded corpus
     svm = _pq_subvectors(vm)
     centroids = _pq_train(svm)
-    codes = _pq_assign(svm.filter(is_cand), centroids).select(
-        F.col("vec_id").alias("cand_id"), "s", "cluster"
-    )
-    lut = (
-        svm.filter(is_probe)
-        .join(F.broadcast(centroids), "s")
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            "s",
-            "cluster",
-            _pq_sqdist().alias("pd"),
-        )
-    )
+    codes, lut = _pq_adc_tables(svm, centroids, is_probe, is_cand)
     adc = (
         codes.join(F.broadcast(lut), ["s", "cluster"])
         .groupBy("probe_id", "cand_id")
@@ -3366,18 +3077,8 @@ def ann_multiprobe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     is_probe = F.expr(_ra_probe_pred())
     is_cand = F.expr(_ANN_INDEX)
-    vm = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda y: F.round(y.cast("double") * _SCALE).cast("long"),
-        ).alias("v"),
-    )
-    n2 = F.aggregate(
-        F.transform("v", lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    vm = emb.select("vec_id", _int_micro("embedding").alias("v"))
+    n2 = _int_norm2_raw("v")
     normed = checkpoint_pinned(vm.select("vec_id", "v", n2.alias("n2")))
     probes = F.broadcast(
         normed.filter(is_probe).select(
@@ -3391,11 +3092,7 @@ def ann_multiprobe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("n2").alias("cn2"),
     )
-    int_dot_vv = F.aggregate(
-        F.zip_with("pv", "cv", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    int_dot_vv = _int_dot_raw("pv", "cv")
     pairs = checkpoint_pinned(
         probes.join(cands).select(
             "probe_id",
@@ -3580,13 +3277,9 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded division per dim).
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    vm = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda y: F.round(y.cast("double") * 1_000_000).cast("long"),
-        ).alias("v"),
-    ).transform(checkpoint_pinned)
+    vm = emb.select("vec_id", _int_micro("embedding").alias("v")).transform(
+        checkpoint_pinned
+    )
     mu = vm.agg(
         *[
             F.round(
@@ -3611,11 +3304,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(PCA_ITERS):
         t = F.round(
-            F.aggregate(
-                F.zip_with("c", "w", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).cast("double")
+            _int_dot_raw("c", "w").cast("double")
             / 1_000_000.0
         ).cast("long")
         # single consumer (the Rayleigh pass re-projects at the final w)
@@ -3654,11 +3343,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .transform(checkpoint_pinned)
         )
     t_final = F.round(
-        F.aggregate(
-            F.zip_with("c", "w", lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
+        _int_dot_raw("c", "w").cast("double")
         / 1_000_000.0
     ).cast("long")
     tfin = cv.crossJoin(F.broadcast(w)).select(t_final.alias("t"))

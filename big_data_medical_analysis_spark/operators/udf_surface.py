@@ -46,6 +46,14 @@ def round_half_away(arr: np.ndarray, ndigits: int) -> np.ndarray:
     return np.copysign(np.floor(np.abs(s) + 0.5), s) / (10.0**ndigits)
 
 
+def round_half_away_int(s: np.ndarray) -> np.ndarray:
+    """An ALREADY-scaled array rounded half away from zero to int64 — the
+    numpy twin of SQL ``CAST(round(s) AS BIGINT)``. Scaling and dividing
+    by 10⁰ are exact, so this is the inline copysign/floor idiom bit for
+    bit."""
+    return round_half_away(s, 0).astype(np.int64)
+
+
 # ---------------------------------------------------------------------------
 # 1. Scalar pandas UDF (Arrow batches, JVM⇄Python)
 # ---------------------------------------------------------------------------
@@ -136,11 +144,9 @@ def _l2_unit_micro(vec) -> "np.ndarray":
     the same order as the oracle SQL, so both engines produce the same
     int64s."""
     arr = np.asarray(vec, dtype=np.float64)
-    s = arr * 1_000_000.0
-    iscaled = np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
+    iscaled = round_half_away_int(arr * 1_000_000.0)
     norm = float(np.sqrt(float((iscaled * iscaled).sum())))
-    m = (arr * 1_000_000.0 / norm) * 1_000_000.0
-    return np.copysign(np.floor(np.abs(m) + 0.5), m).astype(np.int64)
+    return round_half_away_int((arr * 1_000_000.0 / norm) * 1_000_000.0)
 
 
 def l2_normalize_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,13 +494,9 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # round half-AWAY-from-zero to match SQL round() — np.round is
         # half-to-even and the float32 corpus does hit exact .5 at 10⁻⁶
-        s = mat * 1_000_000.0
-        scaled = (
-            np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64).sum(axis=0)
-        )
+        scaled = round_half_away_int(mat * 1_000_000.0).sum(axis=0)
         mean = scaled / 1_000_000.0 / len(pdf)
-        m6 = mean * 1_000_000.0
-        cent = np.copysign(np.floor(np.abs(m6) + 0.5), m6) / 1_000_000.0
+        cent = round_half_away(mean, 6)
         return pd.DataFrame(
             {"label": [int(pdf["label"].iloc[0])], "centroid": [cent.tolist()]}
         )
@@ -540,7 +542,7 @@ def _binary_predict(emb: pd.Series) -> pd.Series:
     preds = []
     for vec in emb:
         arr = np.asarray(vec, dtype=np.float64) * 1_000_000.0
-        iscaled = np.copysign(np.floor(np.abs(arr) + 0.5), arr).astype(np.int64)
+        iscaled = round_half_away_int(arr)
         w = np.where(np.arange(iscaled.size) % 2 == 0, 1, -1).astype(np.int64)
         preds.append(int((iscaled * w).sum() > 0))
     return pd.Series(preds, dtype="int32")
@@ -821,7 +823,7 @@ def cogrouped_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["user_id", "n_purchases", "total_value", "segment"]
             )
         v = evs["value"].to_numpy("float64") * 100.0
-        cents = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype("int64").sum()
+        cents = round_half_away_int(v).sum()
         return pd.DataFrame(
             {
                 "user_id": [int(evs["user_id"].iloc[0])],
@@ -883,10 +885,9 @@ def arrow_l1_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_ids = batch.column(0).to_pylist()
             norms = []
             for vec in batch.column(1).to_pylist():
-                s = np.asarray(vec, dtype=np.float64) * 1_000_000.0
-                iscaled = np.copysign(
-                    np.floor(np.abs(s) + 0.5), s
-                ).astype(np.int64)
+                iscaled = round_half_away_int(
+                    np.asarray(vec, dtype=np.float64) * 1_000_000.0
+                )
                 norms.append(int(np.abs(iscaled).sum()))
             yield pa.RecordBatch.from_pydict(
                 {

@@ -110,162 +110,24 @@ def _load_all() -> None:
 _WINDOW = 50
 
 # Editorial tiebreaker *within* the never-checked block only — everything else
-# is artifact-driven. Rationale per VERDICT r7 task 1: with 54 never-checked
-# and a 50-slot window, 4 must wait a round; defer the ones whose failure
-# modes are already covered by green queries (plain window/rollup/aggregate
-# over orders/lineitem), not the sketches/UDAFs/sources with novel surface.
-_DEFER_WITHIN_NEVER_CHECKED: tuple[str, ...] = (
-    "bool_count_if_flags",
-    "percent_rank_cume_orders",
-    "frame_value_functions",
-    "time_hierarchy_rollup",
-    # deferred when orders_column_profile_approx (round 8, VERDICT task 6)
-    # took the 50th slot: hints change physical strategy, never semantics,
-    # and the underlying join outputs are green in many checked queries
-    "join_hint_strategies",
-    # round-10 closing session registered 53 never-checked against the
-    # 50-slot window; defer the three whose building blocks are already
-    # driver-green in other queries (band join + percentile_disc via
-    # rolling/gapfill family; power-sum variances via corr/regr family;
-    # the k_anonymity_audit group shape) — NOT the novel-machinery ones
-    # (AUC/Gini/conformal prefix sums, blocking audits, perplexity,
-    # diversity, dHash), which need their first driver row
-    "rolling_median_revenue",
-    "ab_test_power_mde",
-    "l_diversity_audit",
-    # 54th never-checked (user_erasure_rewrite took a window slot — a
-    # sink-job audit needs its first driver row more than RFM's CASE
-    # binning over percentile_disc thresholds, whose pieces are green
-    # via the decile/ntile family)
-    "rfm_customer_segments",
-    # 55th/56th: the DiD cells are the ab_test/CUPED combine shape
-    # (both prioritized in-window) and the forecast metrics are lag
-    # joins + quantized sums green via ACF/rolling-median — defer both
-    "did_estimator",
-    "forecast_accuracy_naive",
-)
+# is artifact-driven. When more queries are never-checked than the window
+# holds, list here the ones whose failure modes are already covered by green
+# queries (plain window/rollup/aggregate shapes), not the ones with novel
+# surface; they sort to the end of the never-checked block. Every name must
+# be registered (tests/test_entry.py). Empty while no query is never-checked.
+_DEFER_WITHIN_NEVER_CHECKED: tuple[str, ...] = ()
 
-# Explicit rotation key AHEAD of plain staleness (VERDICT r9 task 1): a query
-# whose implementation changed in round R but whose latest driver row predates
-# R is running on an unverified code path — the driver row is the contract
+# Explicit rotation key AHEAD of plain staleness: a query whose
+# implementation changed in round R but whose latest driver row predates R
+# is running on an unverified code path — the driver row is the contract
 # signal, so these lead the window (right after any never-checked queries).
 # Maintained by hand at change time: add/update `name: round` when a round
 # edits a query's value-producing code; the entry self-expires once a driver
 # row >= that round lands (the comparison below), so stale entries are
-# harmless. Non-value changes (plan pins, docstrings) don't belong here.
-_CODE_CHANGED_ROUND: dict[str, int] = {
-    # round 8/9 edits whose last driver row was r5 (VERDICT r9 audit list;
-    # tools/selfcheck.py re-verified all green, but the driver row is the
-    # signal of record):
-    "ivf_topk": 9,
-    "approx_price_quantiles": 9,
-    "order_chain_recursion": 9,
-    # (kmeans_lloyd_centroids' r9 entry superseded by its r12 entry below —
-    # a dict literal keeps the later key, so the r9 line is removed; the
-    # same convention removes the r9/r10/r13/r15 lines for the 11 names
-    # re-listed in the round-16 block at the bottom)
-    "null_safe_join_counts": 9,
-    "prefix_filter_jaccard_join": 9,
-    "bigram_pmi_collocations": 9,
-    # round 10 semantics fix: running-max merge (true session_window
-    # gapExpr semantics) replaced the previous-event-only gap test
-    "dynamic_gap_sessions": 10,
-    # round 11 ADVICE fixes: conformal moved to a TRUE 3-way split (md5
-    # mod 3: train/calibrate/test — values change); NDCG oracle now
-    # ranks the bm25 list on the 6-dp rounded score like the Spark side
-    # (latent tie-order flake removed); AUC/Gini ride weight_below's
-    # new integral-order RANGE frame (value-identical for their
-    # distinct cells, re-check anyway since the frame expression
-    # changed — the histogram_incremental_daily precedent)
-    "conformal_interval_coverage": 11,
-    "ndcg_retrieval_eval": 11,
-    "auc_mann_whitney": 11,
-    "gini_customer_concentration": 11,
-    # round 12 build/probe wall split (VERDICT r11 task 3): pure function
-    # extraction with byte-identical expressions — value-identical by
-    # construction, re-check anyway per the histogram_incremental_daily
-    # precedent (the code path the driver verified is no longer the one
-    # that runs)
-    "minhash_incremental_probe": 12,
-    "ann_incremental_probe": 12,
-    # (ann_adaptive_probe's r14 entry superseded by its r17 entry below;
-    # dedup_components' r16 entry likewise — dict literal keeps the later
-    # key, the kmeans r9/r12 precedent)
-    # ------------------------------------------------------------------
-    # round 16 (optimization round 1): ALL 41 queries whose value-producing
-    # code was rewritten by the r16 waves (VERDICT r16 item 1 — the round
-    # itself omitted these entries; added at the r17 open so the driver
-    # window leads with the 31 rewrites that have no driver row on the new
-    # code). The 10 with green r16 rows (ivf_pq_topk, ann_recall_audit,
-    # grid_radius_join, bucketed_fact_chain, snm_multipass/snm/lsh blocking
-    # audits, ann_multiprobe_audit, brand_graph_clustering_coeff,
-    # image_dhash_near_dup) self-expire immediately via latest >= 16.
-    # Wave 1 — map-side argmin Lloyd/PQ family + one-buffer quantiles:
-    "kmeans_lloyd_centroids": 16,
-    "semdedup_prune_stats": 16,
-    "d4_prototype_prune": 16,
-    "curated_corpus_epoch": 16,
-    "pq_codebook_distortion": 16,
-    "pq_adc_topk": 16,
-    "ivf_pq_topk": 16,
-    "ann_recall_audit": 16,
-    "lineitem_price_quantiles": 16,
-    # Wave 2a — first-colliding-band emission (pmh family):
-    "governed_mixture_sample": 16,
-    "intersource_dup_matrix": 16,
-    "split_leakage_audit": 16,
-    "minhash_portable_groups": 16,
-    # Wave 2b — parallelism-starved stages:
-    "cogrouped_user_profile": 16,
-    "ngram_stats": 16,
-    "grid_radius_join": 16,
-    "bucketed_colocated_join": 16,
-    "bucketed_fact_chain": 16,
-    # Waves 3a/3c — blocking-audit subtree pins:
-    "snm_multipass_blocking_audit": 16,
-    "snm_blocking_quality_audit": 16,
-    "lsh_blocking_quality_audit": 16,
-    # Wave 3b — one-pass grouping-sets rewrites:
-    "fedavg_eval_loop": 16,
-    "hll_incremental_daily": 16,
-    "histogram_incremental_daily": 16,
-    # Wave 4a — multiprobe two-tier pins:
-    "ann_multiprobe_audit": 16,
-    # Wave 5a — simhash first-band emission + CC edge repartition:
-    "simhash_near_dup": 16,
-    "edit_distance_pairs": 16,
-    # Wave 5c — basket-array mining family:
-    "copurchase_brand_pairs": 16,
-    "triangle_count_brand_graph": 16,
-    "brand_pagerank": 16,
-    "frequent_triples_apriori": 16,
-    "brand_graph_clustering_coeff": 16,
-    # Waves 6a/6c — fused one-crossing image kernels (png/jpeg decode
-    # stats' r16 entries superseded by their r17 codec-kernel entries
-    # below — dict literal keeps the later key, the kmeans precedent):
-    "image_decode_stats": 16,
-    "image_resize_stats": 16,
-    "image_augment_fanout": 16,
-    "image_dhash_near_dup": 16,
-    # Wave 6b — twin synthesizes inside the fused feature pass:
-    "chexpert_pipeline_twin": 16,
-    "chexpert_twin_replay": 16,
-    # ------------------------------------------------------------------
-    # round 17 (optimization round 2) rewrites:
-    # connected_components: bucketed edge table + probe-fused lazy
-    # checkpoints (value-identical min-label propagation, re-check per
-    # the histogram_incremental_daily precedent)
-    "dedup_components": 17,
-    # serve-bits + normed subtrees pinned (plan change, value-identical)
-    "ann_adaptive_probe": 17,
-    # LUT entropy decode in jpeg_codec (kernel parity proven brute-force,
-    # 400 images + 300 malformed streams old==new; rows-only query)
-    "jpeg_decode_stats": 17,
-    # run-vectorized PNG unfilter (types 0/1/2; parity proven brute-force
-    # on 500 images + mixed-filter streams; rows-only queries)
-    "png_decode_stats": 17,
-    "pkl_png_roundtrip": 17,
-}
+# harmless and are deleted once expired. Non-value changes (plan pins,
+# docstrings, refactors whose oracle hashes are re-verified unchanged) don't
+# belong here. Each key appears once (tests/test_entry.py).
+_CODE_CHANGED_ROUND: dict[str, int] = {}
 
 # ---------------------------------------------------------------------------
 # Rotation growth cap (VERDICT r10 task 1, written rule):

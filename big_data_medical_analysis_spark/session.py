@@ -19,13 +19,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEMORY_CAP_MIB = 24 * 1024
+
+
+def _mem_total_kib() -> int | None:
+    """``MemTotal`` of /proc/meminfo in KiB, or None where it can't be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _driver_memory() -> str:
+    """The driver heap for this box: ~60% of ``MemTotal`` (the JVM's
+    off-heap, the Python workers and the OS need the rest — a fixed 24g
+    heap on a 16 GB box gets the JVM OOM-killed), capped at 24g, and 24g
+    where ``MemTotal`` can't be read."""
+    kib = _mem_total_kib()
+    if kib is None:
+        return f"{_DRIVER_MEMORY_CAP_MIB}m"
+    return f"{min(kib * 6 // 10 // 1024, _DRIVER_MEMORY_CAP_MIB)}m"
+
+
 # Tuned for the local[32] test harness; on a real cluster these are
 # overridden by spark-submit conf. AQE handles the runtime delta.
 _DEFAULTS: dict[str, str] = {
-    # --- heap: local[N] puts driver+executors in ONE JVM; the 1g default
-    # OOMs long before the 128 GiB box does. Only effective at JVM launch
-    # (getOrCreate), inert when attaching to an existing session. ---
-    "spark.driver.memory": "24g",
     # --- adaptive execution: the 100 TB insurance policy ---
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -63,7 +85,10 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
+    # heap: local[N] puts driver+executors in ONE JVM, and the 1g default
+    # OOMs long before the box does. Only effective at JVM launch
+    # (getOrCreate), inert when attaching to an existing session.
+    conf = {"spark.driver.memory": _driver_memory(), **_DEFAULTS}
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

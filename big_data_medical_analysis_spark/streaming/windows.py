@@ -264,9 +264,12 @@ def running_user_totals_stream(events: DataFrame) -> DataFrame:
     (``GroupStateTimeout.EventTimeTimeout``) to bound it — fixed user
     universe here, so NoTimeout is the honest choice.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from big_data_medical_analysis_spark.operators.udf_surface import (
+        round_half_away_int,
+    )
 
     out_schema = "user_id long, n_events long, total_value double"
     state_schema = "n long, total_cents long"
@@ -275,13 +278,11 @@ def running_user_totals_stream(events: DataFrame) -> DataFrame:
         n, cents = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            # Half-away-from-zero, matching common.cents (Spark round) and
-            # udf_surface.round_half_away — pandas Series.round is
-            # half-to-even, which would drift 0.01 from the batch totals.
+            # Half-away-from-zero, matching common.cents (Spark round) —
+            # pandas Series.round is half-to-even, which would drift 0.01
+            # from the batch totals.
             v = pdf["value"].to_numpy("float64") * 100.0
-            cents += int(
-                (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype("int64").sum()
-            )
+            cents += int(round_half_away_int(v).sum())
         state.update((n, cents))
         yield pd.DataFrame(
             {
@@ -529,16 +530,18 @@ class _RunningTotalsProcessor(_StatefulProcessor):
         self._state = handle.getValueState("totals", "n long, cents long")
 
     def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        import numpy as np
         import pandas as pd
+
+        from big_data_medical_analysis_spark.operators.udf_surface import (
+            round_half_away_int,
+        )
 
         n, cents = (0, 0)
         if self._state.exists():
             n, cents = self._state.get()
         for pdf in rows:
-            v = pdf["value"].astype("float64") * 100.0
             # half-away rounding, matching money_sum / the batch oracle
-            iv = np.copysign(np.floor(np.abs(v) + 0.5), v).astype("int64")
+            iv = round_half_away_int(pdf["value"].astype("float64") * 100.0)
             n += len(pdf)
             cents += int(iv.sum())
         self._state.update((n, cents))
@@ -1402,10 +1405,12 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
         SEMDEDUP_TARGET_WIDTH,
         SEMDEDUP_TAU,
         _hier_coarse_centroids,
-        _hier_fine_assign,
         _hier_fine_centroids,
-        _lloyd_assign_agg,
+        _int_dot_raw,
+        _int_micro,
+        _int_norm2_raw,
         cosine,
+        lloyd_assign,
     )
 
     codebook_dir = os.path.join(state_dir, "codebook")
@@ -1419,21 +1424,9 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
             F.col("ingest_batch") < batch_id
         )
 
-    n2_of = lambda c: F.aggregate(  # noqa: E731 — local expr factory
-        F.transform(c, lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        vm = batch_df.select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda y: F.round(y.cast("double") * 1_000_000).cast("long"),
-            ).alias("v"),
-        ).persist()
+        vm = batch_df.select("vec_id", _int_micro("embedding").alias("v")).persist()
         pinned = [vm]
         try:
             bootstrap = not _has_prior(counts_dir, batch_id)
@@ -1458,16 +1451,20 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
                 codebook = spark.read.parquet(codebook_dir).select(
                     F.col("cell").cast("integer").alias("cluster"), "c"
                 )
-            route = _lloyd_assign_agg(vm, codebook).select(
-                "vec_id", F.col("cluster").cast("integer").alias("cell")
+            # the routed rows carry their vector: no join back to vm
+            vr = (
+                lloyd_assign(vm, codebook)
+                .select("vec_id", F.col("cluster").cast("integer").alias("cell"), "v")
+                .persist()
             )
-            vr = vm.join(route, "vec_id").select("vec_id", "cell", "v").persist()
             pinned.append(vr)
             if bootstrap:
                 ex_fines = spark.createDataFrame(
                     [], "cell int, fine int, c array<bigint>"
                 )
-                new_fines = _hier_fine_centroids(vr)
+                new_fines = _hier_fine_centroids(vr).withColumnRenamed(
+                    "cluster", "fine"
+                )
             else:
                 prior_n = (
                     _read_prior(spark, counts_dir, batch_id)
@@ -1521,11 +1518,13 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
             # lineage is the ENTIRE cell-gated fine Lloyd
             new_fines = new_fines.persist()
             pinned.append(new_fines)
-            fa = _hier_fine_assign(vr, ex_fines.unionByName(new_fines))
+            fines = ex_fines.unionByName(new_fines).withColumnRenamed(
+                "fine", "cluster"
+            )
             fav = (
-                fa.join(vm, "vec_id")
-                .select("vec_id", "cell", "fine", "d", "v")
-                .withColumn("n2", n2_of("v"))
+                lloyd_assign(vr, fines, ("cell",), broadcast=False)
+                .select("vec_id", "cell", F.col("cluster").alias("fine"), "d", "v")
+                .withColumn("n2", _int_norm2_raw("v"))
                 .persist()
             )
             pinned.append(fav)
@@ -1537,17 +1536,13 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
                 pk = _read_prior(spark, keepers_dir, batch_id).select(
                     "cell", "fine", F.col("v").alias("v_k")
                 )
-            dot_pk = F.aggregate(
-                F.zip_with("v", "v_k", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
+            dot_pk = _int_dot_raw("v", "v_k")
             # persist both pruned sets (slim vec_id relations): each feeds
             # the keeper anti-join AND its own stats count — unpersisted,
             # the (cell, fine)-keyed screen joins would re-execute per
             # consumer (code-review r15)
             pruned_prior = (
-                fav.join(pk.withColumn("n2_k", n2_of("v_k")), ["cell", "fine"])
+                fav.join(pk.withColumn("n2_k", _int_norm2_raw("v_k")), ["cell", "fine"])
                 .filter(
                     cosine(dot_pk, F.col("n2"), F.col("n2_k")) >= SEMDEDUP_TAU
                 )
@@ -1575,11 +1570,7 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
                 F.col("v").alias("v_b"),
                 F.col("n2").alias("n2_b"),
             )
-            dot_ab = F.aggregate(
-                F.zip_with("v_a", "v_b", lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
+            dot_ab = _int_dot_raw("v_a", "v_b")
             pruned_batch = (
                 side_a.join(side_b, ["cell", "fine"])
                 .filter(F.col("r_a") < F.col("r_b"))
@@ -1836,6 +1827,10 @@ def pit_enrich_stream(events: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from big_data_medical_analysis_spark.operators.udf_surface import (
+        round_half_away_int,
+    )
+
     out_schema = (
         "event_id long, user_id long, es long, status_at string, v_c long"
     )
@@ -1853,7 +1848,7 @@ def pit_enrich_stream(events: DataFrame) -> DataFrame:
             side = (pdf["event_type"] == "purchase").to_numpy()
             eid = pdf["event_id"].to_numpy()
             v = pdf["value"].to_numpy("float64") * 100.0
-            v_c = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype("int64")
+            v_c = round_half_away_int(v)
             et = pdf["event_type"].to_numpy()
             order = np.lexsort((eid, side.astype("int64"), es))
             for i in order:

@@ -995,6 +995,46 @@ def test_d4_plan_budget(spark, sf_dir):
     assert P.unpartitioned_window_count(df) == 0, plan
 
 
+def test_lloyd_trainer_plan_budgets(spark, sf_dir):
+    """The shared exact Lloyd trainer's physical shape, pinned per caller
+    as (shuffle exchanges, broadcast joins, sort-merge joins). Each round
+    is one map-side argmin against a BROADCAST codebook plus one
+    (keys, cluster, dim) mean aggregate, so a trainer that lost the
+    global/PQ codebook broadcast (sort-merge joins appear) or grew an
+    extra shuffle per round fails here."""
+    budgets = {
+        "kmeans_lloyd_centroids": (5, 2, 0),
+        "pq_codebook_distortion": (8, 3, 0),
+        "ivf_pq_topk": (20, 10, 1),
+    }
+    for name, (shuffles, bcast, smj) in budgets.items():
+        df = QS[name](spark, sf_dir)
+        plan = P.physical_plan(df)
+        got = (
+            P.exchange_count(df),
+            P.broadcast_join_count(df),
+            plan.count("SortMergeJoin"),
+        )
+        assert got == (shuffles, bcast, smj), (name, got, plan)
+
+
+def test_hier_fine_level_joins_cells_unhinted(spark, sf_dir):
+    """The hierarchical fine level equi-joins each vector to its OWN
+    cell's centroids and must never carry a broadcast hint: its centroid
+    table grows with the corpus. The two training rounds and the final
+    assignment are the three cell-keyed joins; the one hinted join is the
+    kc-row kf frame of the fine init."""
+    from big_data_medical_analysis_spark.operators import similarity as S
+
+    df = S._hier_assign(S._kmeans_vm(spark, sf_dir))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.split("\n") if "Join Inner" in ln]
+    cell_keyed = [ln for ln in joins if "kf#" not in ln]
+    assert len(cell_keyed) == S.KMEANS_ITERS + 1, joins
+    assert all("strategy=broadcast" not in ln for ln in cell_keyed), joins
+    assert plan.count("strategy=broadcast") == 1, plan
+
+
 def test_ann_adaptive_probe_plan_budget(spark, sf_dir):
     """Adaptive ANN probe (round 13): the serve-geometry derivation and
     candidate join sit above a checkpointed hits relation (the masked

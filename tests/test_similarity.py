@@ -720,3 +720,25 @@ def test_adx_planted_candidates_and_rerank(spark, sf_dir):
         assert (r.best_cand_id, r.best_cos) == (best[1], -best[0]), pid
         checked += 1
     assert checked == 5
+
+
+def test_lloyd_train_keys_are_data(spark, sf_dir):
+    """Keys are data, not code paths: ONE ``lloyd_train`` pass keyed on
+    the PQ subspace must give, bit for bit, the codebook of training each
+    subspace's slice on its own with no keys — the contract the global,
+    PQ and fine-level callers all share."""
+    svm = S._pq_subvectors(S._pq_intvecs(spark, sf_dir))
+    init = svm.filter(F.col("vec_id") < S.PQ_K).select(
+        "s", F.col("vec_id").cast("integer").alias("cluster"), F.col("v").alias("c")
+    )
+    keyed, _ = S.lloyd_train(svm, init, ("s",))
+    got = {(r.s, r.cluster): list(r.c) for r in keyed.collect()}
+    want = {}
+    for s in range(S.PQ_SUBSPACES):
+        book, _ = S.lloyd_train(
+            svm.filter(F.col("s") == s).select("vec_id", "v"),
+            init.filter(F.col("s") == s).drop("s"),
+        )
+        want.update({(s, r.cluster): list(r.c) for r in book.collect()})
+    assert {s for s, _ in got} == set(range(S.PQ_SUBSPACES))
+    assert got == want

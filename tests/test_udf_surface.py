@@ -83,6 +83,33 @@ def test_round_half_away():
     out = U.round_half_away(arr, 6)
     assert out.tolist() == [0.000001, -0.000001, 0.000001, -0.000002]
 
+    # the int64 form must equal the inline idiom it replaced, bit for bit
+    import pandas as pd
+
+    def inline(s):
+        return np.copysign(np.floor(np.abs(s) + 0.5), s).astype(np.int64)
+
+    ties = np.array([0.5, -0.5, 2.5, -2.5, 1e6 + 0.5, -(1e6 + 0.5)])
+    got = U.round_half_away_int(ties)
+    assert got.dtype == np.int64
+    assert got.tolist() == [1, -1, 3, -3, 1_000_001, -1_000_001]
+    rng = np.random.default_rng(20261017)
+    corpus = rng.normal(size=(64, 64)).astype(np.float32).astype(np.float64)
+    for s in (
+        ties,
+        corpus * 1_000_000.0,
+        rng.normal(scale=1e6, size=4096),
+        rng.integers(-(10**6), 10**6, size=4096) + 0.5,
+        rng.uniform(-1e12, 1e12, size=4096),
+    ):
+        got = U.round_half_away_int(s)
+        assert got.dtype == np.int64
+        assert np.array_equal(got, inline(s))
+    money = pd.Series(rng.integers(-(10**5), 10**5, size=512) / 100.0) * 100.0
+    assert np.array_equal(
+        U.round_half_away_int(money).to_numpy(), inline(money).to_numpy()
+    )
+
 
 def test_model_eval_prediction_matches_expression(spark, sf_dir):
     """Batch-inference UDF ≡ the equivalent Catalyst expression: the ±1
