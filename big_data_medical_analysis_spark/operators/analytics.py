@@ -25,6 +25,7 @@ from big_data_medical_analysis_spark.operators.common import (
     checkpoint_pinned,
     date_str,
     explode_nonnull_pinned,
+    md5_int,
     money_sum,
     ts_str,
 )
@@ -1889,10 +1890,7 @@ def watermark_delay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     es = F.unix_timestamp("ts")
     jitter = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10
-        ).cast("long"),
-        F.lit(WATERMARK_JITTER_S),
+        md5_int(F.col("event_id").cast("string"), 15), F.lit(WATERMARK_JITTER_S)
     )
     seq = ev.select(
         "user_id",

@@ -13,6 +13,18 @@ is what you'd want at 100 TB anyway — money in integer cents.
 Timestamps are rendered with an explicit format on both sides
 (Spark ``date_format`` ↔ DuckDB ``strftime``) rather than relying on engine
 default casts, which differ in fractional-second padding.
+
+Every deterministic "random" decision — client and fold splits, salted
+shuffles, portable MinHash, HLL registers, Count-Min and Bloom cells,
+rendezvous resharding, weighted-sampling races, watermark jitter — draws
+from one **portable hash** (``md5_int``): the first k hex digits of
+``md5(key)`` read as a BIGINT. md5 is the only hash function both engines
+ship (Spark's ``hash``/``xxhash64`` have no DuckDB twin), so the oracle
+rebuilds the identical value and checks it, not just a row count. k is
+8 (a non-negative 32-bit value) or 15 (60 bits, for fingerprints that
+must not collide); 16 digits would overflow a signed BIGINT in both
+engines, so k is limited to 1..15. Salts are part of the key
+(``concat(key, ':salt')``), never a second hash function.
 """
 
 from __future__ import annotations
@@ -173,6 +185,36 @@ def cents(col: Column | str, scale: int = 100) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * F.lit(scale)).cast("long")
+
+
+def md5_int(s: Column | str, hexdigits: int = 8) -> Column:
+    """The portable hash: first ``hexdigits`` hex digits of ``md5(s)`` as
+    int64, in [0, 16^hexdigits). ``s`` is a string column (or its name);
+    callers cast keys and append salts themselves.
+
+    DuckDB twin: ``CAST(concat('0x', substr(md5(s), 1, k)) AS BIGINT)``.
+    """
+    if not 1 <= hexdigits <= 15:
+        raise ValueError(
+            f"md5_int: hexdigits={hexdigits} outside 1..15 (16 hex digits "
+            "overflow a signed BIGINT)"
+        )
+    return F.conv(F.substring(F.md5(s), 1, hexdigits), 16, 10).cast("long")
+
+
+def es_key(key: Column | str, weight: Column | str) -> Column:
+    """Efraimidis–Spirakis weighted-sampling key ``-ln(u) / w`` with
+    u = (md5_int(key) + 0.5) / 2^32 in (0, 1): the K smallest keys are a
+    weighted sample without replacement. u is bit-identical in both
+    engines; ``ln`` is not (Spark's is ``StrictMath.log``) and may differ
+    by one ulp, so oracles compare the key rounded or by its order.
+
+    DuckDB twin: ``-ln((CAST(concat('0x', substr(md5(key), 1, 8)) AS BIGINT)
+    + 0.5) / 4294967296.0) / w``.
+    """
+    w = F.col(weight) if isinstance(weight, str) else weight
+    u = (md5_int(key).cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
+    return -F.log(u) / w
 
 
 def money_sum(col: Column | str, scale: int = 100) -> Column:

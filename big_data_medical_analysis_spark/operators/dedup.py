@@ -38,8 +38,10 @@ from pyspark.sql import functions as F
 
 from big_data_medical_analysis_spark.operators.common import (
     checkpoint_pinned,
+    es_key,
     explode_nonnull_pinned,
     fan_out,
+    md5_int,
 )
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
@@ -115,9 +117,7 @@ def _token_hashes(text: Column | str) -> Column:
     32-bit prefix is plenty for bit-majority voting.
     """
     toks = F.array_distinct(F.split(text, " "))
-    return F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-    )
+    return F.transform(toks, lambda t: md5_int(t))
 
 
 def simhash(hashes: Column) -> Column:
@@ -555,6 +555,14 @@ PMH_ROWS_PER_BAND = 4
 PMH_BANDS = 4
 
 
+def _pmh_component(j: int) -> Column:
+    """MinHash component j over a ``toks`` column (a doc's distinct
+    tokens): min of ``md5_int(token ':' j)``. DuckDB twin:
+    ``_pmh_component_sql``."""
+    jl = F.lit(f":{j}")
+    return F.array_min(F.transform(F.col("toks"), lambda t: md5_int(F.concat(t, jl))))
+
+
 def _pmh_component_sql(j: int) -> str:
     return (
         "list_min(list_transform(toks, t -> CAST(concat('0x', "
@@ -601,24 +609,13 @@ def pmh_banded_buckets(
     n_hashes = PMH_BANDS * PMH_ROWS_PER_BAND
     toks = F.array_distinct(F.split(F.col("text"), " "))
 
-    def _component(j: int) -> Column:
-        jl = F.lit(f":{j}")
-        return F.array_min(
-            F.transform(
-                F.col("toks"),
-                lambda t: F.conv(
-                    F.substring(F.md5(F.concat(t, jl)), 1, 8), 16, 10
-                ).cast("long"),
-            )
-        )
-
     extra = list(carry) + ([F.size("toks").alias("tsz")] if with_tsz else [])
     sig = fan_out(
         docs.select("doc_id", toks.alias("toks"), *carry), "doc_id"
     ).select(
         "doc_id",
         *extra,
-        *[_component(j).alias(f"h{j}") for j in range(n_hashes)],
+        *[_pmh_component(j).alias(f"h{j}") for j in range(n_hashes)],
     )
     bkts = F.array(
         *[
@@ -788,6 +785,8 @@ def connected_components(
         und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        # raw and lazy, not checkpoint_pinned (eager): round 1's probe
+        # materializes it; an eager pin would add one job
         .localCheckpoint(eager=False)
     )
     # Convergence probe: labels only ever decrease, so sum(label) strictly
@@ -832,6 +831,8 @@ def connected_components(
                 labels.unionAll(nbr)
                 .groupBy("node")
                 .agg(F.min("label").alias("label"))
+                # raw and lazy, not checkpoint_pinned (eager): the probe
+                # below materializes the round; eager adds a job per round
                 .localCheckpoint(eager=False)
             )
             cur_sum = labels.agg(F.sum("label")).collect()[0][0]
@@ -1186,15 +1187,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     split_col = F.when(
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            md5_int(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))),
             F.lit(10),
         )
         < _LEAK_SPLIT_FRAC,
@@ -1484,22 +1477,11 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hashes = PMH_BANDS * PMH_ROWS_PER_BAND
     toks = F.array_distinct(F.split(F.col("text"), " "))
 
-    def _component(j: int) -> Column:
-        jl = F.lit(f":{j}")
-        return F.array_min(
-            F.transform(
-                F.col("toks"),
-                lambda t: F.conv(
-                    F.substring(F.md5(F.concat(t, jl)), 1, 8), 16, 10
-                ).cast("long"),
-            )
-        )
-
     base = docs.select("doc_id", toks.alias("toks"))
     sig = base.select(
         "doc_id",
         "toks",
-        *[_component(j).alias(f"h{j}") for j in range(n_hashes)],
+        *[_pmh_component(j).alias(f"h{j}") for j in range(n_hashes)],
     )
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
@@ -2018,11 +2000,7 @@ def governed_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("quota"),
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
-    ek = -F.log(u) / F.col("n_chars")
+    ek = es_key(F.col("doc_id").cast("string"), "n_chars")
     w = W.partitionBy("source").orderBy(F.asc("ek"), F.asc("doc_id"))
     ranked = (
         kept.select("doc_id", "source", ek.alias("ek"))
@@ -2122,20 +2100,9 @@ def lsh_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _component(j: int) -> Column:
-        jl = F.lit(f":{j}")
-        return F.array_min(
-            F.transform(
-                F.col("toks"),
-                lambda t: F.conv(
-                    F.substring(F.md5(F.concat(t, jl)), 1, 8), 16, 10
-                ).cast("long"),
-            )
-        )
-
     n_hashes = PMH_BANDS * PMH_ROWS_PER_BAND
     sig = toks.select(
-        "doc_id", *[_component(j).alias(f"h{j}") for j in range(n_hashes)]
+        "doc_id", *[_pmh_component(j).alias(f"h{j}") for j in range(n_hashes)]
     )
     banded = sig.select(
         "doc_id",

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from big_data_medical_analysis_spark.operators.common import (
     cents,
     checkpoint_pinned,
+    es_key,
+    md5_int,
     money_sum,
     per_user_tmpdir,
 )
@@ -140,12 +142,7 @@ def portable_client_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     a non-Spark scoring system. One map-side-combinable aggregate."""
     orders = read_table(spark, sf_dir, "orders")
     client = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(4),
+        md5_int(F.col("o_orderkey").cast("string")), F.lit(4)
     ).cast("int")
     return (
         orders.groupBy(client.alias("client"))
@@ -244,15 +241,16 @@ def random_split_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-repartitioned first, as the reference does (:273,:280), because
     randomSplit's disjointness depends on a deterministic partition layout.
 
-    The repartitioned parent is ``localCheckpoint``-ed before splitting:
+    The repartitioned parent is checkpointed before splitting:
     randomSplit derives N child plans from ONE parent, and without
     materialization each child re-executes the scan + shuffle (the
     reference's own recompute hazard, SURVEY §2.2.1 — it re-runs its UDF
     lineage per action). Checkpointing makes the 4 shard counts read
     materialized partitions instead of re-scanning 4×. No oracle (engine
     RNG)."""
-    orders = read_table(spark, sf_dir, "orders").repartition("o_orderkey")
-    orders = orders.localCheckpoint(eager=True)
+    orders = checkpoint_pinned(
+        read_table(spark, sf_dir, "orders").repartition("o_orderkey")
+    )
     shards = orders.randomSplit([0.25] * 4, seed=42)
     tagged = None
     for i, shard in enumerate(shards):
@@ -460,13 +458,7 @@ def seeded_shuffle_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     key = F.col("o_orderkey").cast("string")
     shard = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(key, F.lit(f":{BATCH_SHUFFLE_SEED}"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long"),
+        md5_int(F.concat(key, F.lit(f":{BATCH_SHUFFLE_SEED}"))),
         F.lit(N_BATCH_SHARDS),
     )
     shuffle_key = F.md5(
@@ -526,11 +518,7 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge on one reducer — no global sort, no full shuffle).
     """
     docs = read_table(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
-    ek = -F.log(u) / F.col("n_chars")
+    ek = es_key(F.col("doc_id").cast("string"), "n_chars")
     return (
         docs.select("doc_id", "n_chars", ek.alias("ek"))
         .orderBy(F.asc("ek"), F.asc("doc_id"))
@@ -576,11 +564,7 @@ def lang_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     randomness ⇒ full value oracle.
     """
     docs = read_table(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
-    ek = -F.log(u) / F.col("n_chars")
+    ek = es_key(F.col("doc_id").cast("string"), "n_chars")
     w = W.partitionBy("lang").orderBy(F.asc("ek"), F.asc("doc_id"))
     return (
         docs.select("doc_id", "lang", "n_chars", ek.alias("ek"))
@@ -673,11 +657,7 @@ def curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") == F.col("keeper"))
         .select("doc_id", "lang", "n_chars", "n_tokens", "avg_token_len")
     )
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
-    ek = -F.log(u) / F.col("n_chars")
+    ek = es_key(F.col("doc_id").cast("string"), "n_chars")
     w = W.partitionBy("lang").orderBy(F.asc("ek"), F.asc("doc_id"))
     return (
         keepers.withColumn("ek", ek)
@@ -1677,16 +1657,11 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(F.col("_metadata.file_path")).alias("n_files_before")
     )
     comp = spark.read.parquet(compact_dir)
-    kh = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    kh = md5_int(F.col("o_orderkey").cast("string"), 15)
     audit = comp.agg(
         F.count(F.lit(1)).alias("n_rows"),
         money_sum("o_totalprice").alias("revenue"),
-        F.expr(
-            "bit_xor(cast(conv(substring(md5(cast(o_orderkey as string)),"
-            " 1, 15), 16, 10) as bigint))"
-        ).alias("key_fingerprint"),
+        F.bit_xor(kh).alias("key_fingerprint"),
         F.countDistinct(F.col("_metadata.file_path")).alias("n_files_after"),
     )
     return audit.crossJoin(F.broadcast(files_before)).select(
@@ -1960,21 +1935,10 @@ def rendezvous_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer")
 
     def wt(s: int) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("c_custkey").cast("string"),
-                        F.lit(":"),
-                        F.lit(str(s)),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        return md5_int(
+            F.concat(F.col("c_custkey").cast("string"), F.lit(":"), F.lit(str(s))),
+            15,
+        )
 
     arr9 = F.array(
         *[F.struct(wt(s).alias("wt"), F.lit(s).alias("shard")) for s in range(9)]
@@ -2102,22 +2066,15 @@ def snapshot_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     bucket = (F.col("key") / F.lit(DIFF_BUCKET_WIDTH)).cast("long")
-    row_h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("key").cast("string"),
-                    F.col("status"),
-                    F.col("price_cents").cast("string"),
-                )
-            ),
-            1,
-            15,
+    row_h = md5_int(
+        F.concat_ws(
+            "|",
+            F.col("key").cast("string"),
+            F.col("status"),
+            F.col("price_cents").cast("string"),
         ),
-        16,
-        10,
-    ).cast("long")
+        15,
+    )
 
     def fingerprints(df: DataFrame, n: str, h: str) -> DataFrame:
         return (

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from big_data_medical_analysis_spark.operators.common import fan_out
+from big_data_medical_analysis_spark.operators.common import fan_out, md5_int
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
 
@@ -457,9 +457,7 @@ def table_content_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
 
     def h(*cols) -> Column:
-        return F.conv(
-            F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
-        ).cast("long")
+        return md5_int(F.concat_ws("|", *cols), 15)
 
     def cents(c: str) -> Column:
         return F.round(F.col(c) * 100).cast("long").cast("string")
@@ -688,11 +686,7 @@ def join_size_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def bucketed(df: DataFrame, rows_col: str, keys_col: str) -> DataFrame:
-        b = (
-            F.conv(F.substring(F.md5(F.col("k").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 64
-        )
+        b = md5_int(F.col("k").cast("string")) % 64
         return df.groupBy(b.alias("b")).agg(
             F.sum("n").cast("long").alias(rows_col),
             F.count(F.lit(1)).cast("long").alias(keys_col),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from big_data_medical_analysis_spark.operators.common import (
     date_str,
+    md5_int,
     money_avg,
     money_sum,
     ts_str,
@@ -2486,22 +2487,7 @@ def grid_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = read_table(spark, sf_dir, "part")
 
     def coord(tag: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("p_partkey").cast("string"), F.lit(tag)
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100000
-        )
+        return md5_int(F.concat(F.col("p_partkey").cast("string"), F.lit(tag))) % 100000
 
     pts = checkpoint_pinned(
         part.select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from big_data_medical_analysis_spark.operators.common import md5_int
 from big_data_medical_analysis_spark.operators.similarity import (
     _kmeans_vm,
     _semdedup_screen,
@@ -223,15 +224,7 @@ def curated_epoch(vm: DataFrame, docs: DataFrame) -> DataFrame:
     # the draw is independent of governed_mixture_sample's length-weighted
     # race. Window is partitioned by source over DSIR_KEEP rows — never a
     # corpus-sized single partition.
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":curate"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.concat(F.col("doc_id").cast("string"), F.lit(":curate")))
     wr = W.partitionBy("source").orderBy(h.asc(), F.asc("doc_id"))
     rankd = dsel.select(
         "doc_id", "source", F.col("weight_micro").alias("dsir_weight_micro")

@@ -44,7 +44,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from big_data_medical_analysis_spark.operators.common import checkpoint_pinned, fan_out
+from big_data_medical_analysis_spark.operators.common import (
+    checkpoint_pinned,
+    fan_out,
+    md5_int,
+)
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
 
@@ -1709,21 +1713,13 @@ def contrastive_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = spark.range(1, N_CONTRASTIVE_NEGS + 1).select(
         F.col("id").cast("int").alias("k")
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("anchor_id").cast("string"),
-                    F.lit(":neg:"),
-                    F.col("k").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(
+        F.concat(
+            F.col("anchor_id").cast("string"),
+            F.lit(":neg:"),
+            F.col("k").cast("string"),
+        )
+    )
     negs = (
         anchors.crossJoin(F.broadcast(k))
         .crossJoin(F.broadcast(n))

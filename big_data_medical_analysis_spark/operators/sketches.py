@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_medical_analysis_spark.operators.common import md5_int
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
 
@@ -36,10 +37,8 @@ def cm_bucket(key: Column | str, depth: Column | str) -> Column:
     mod W. Identical in DuckDB (used by the oracle)."""
     k = F.col(key) if isinstance(key, str) else key
     d = F.col(depth) if isinstance(depth, str) else depth
-    h = F.md5(F.concat(k.cast("string"), F.lit(":"), d.cast("string")))
-    return F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(CM_WIDTH)
-    )
+    h = md5_int(F.concat(k.cast("string"), F.lit(":"), d.cast("string")))
+    return F.pmod(h, F.lit(CM_WIDTH))
 
 
 def countmin_build(df: DataFrame, key: str) -> DataFrame:
@@ -135,10 +134,8 @@ def bloom_bit(key: Column | str, i: Column | str) -> Column:
     mod BF_BITS. Identical in DuckDB (used by the oracle)."""
     k = F.col(key) if isinstance(key, str) else key
     d = F.col(i) if isinstance(i, str) else i
-    h = F.md5(F.concat(k.cast("string"), F.lit("#"), d.cast("string")))
-    return F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(BF_BITS)
-    )
+    h = md5_int(F.concat(k.cast("string"), F.lit("#"), d.cast("string")))
+    return F.pmod(h, F.lit(BF_BITS))
 
 
 _BLOOM_SQL = f"""
@@ -425,9 +422,7 @@ def hll_portable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     it and feeds raw values straight to the register max.
     """
     li = read_table(spark, sf_dir, "lineitem")
-    v = F.conv(
-        F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    v = md5_int(F.col("l_orderkey").cast("string"))
     h = li.select(v.alias("v")).distinct()
     agg = hll_harmonic_agg(hll_register_rows(h))
     ex = li.agg(F.count_distinct("l_orderkey").alias("exact_distinct"))
@@ -508,9 +503,7 @@ def hll_merge_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``hll_portable_distinct``.
     """
     li = read_table(spark, sf_dir, "lineitem")
-    v = F.conv(
-        F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    v = md5_int(F.col("l_orderkey").cast("string"))
     h = li.select(F.col("l_returnflag").alias("flag"), v.alias("v")).distinct()
     reg = hll_register_rows(h, "flag")
     merged = (
@@ -653,9 +646,7 @@ def daily_event_registers(ev: DataFrame) -> DataFrame:
     is definitionally comparable to the batch-built table."""
     from big_data_medical_analysis_spark.operators.common import date_str
 
-    v = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    v = md5_int(F.col("event_id").cast("string"))
     h = ev.select(date_str("ts").alias("day"), v.alias("v")).distinct()
     return hll_register_rows(h, "day")
 
@@ -1375,9 +1366,7 @@ def hll_set_algebra_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "N")
     )
-    v = F.conv(
-        F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    v = md5_int(F.col("l_orderkey").cast("string"))
     h = li.select(F.col("l_returnflag").alias("flag"), v.alias("v")).distinct()
     reg = checkpoint_pinned(hll_register_rows(h, "flag"))
     scoped = hll_harmonic_agg(

@@ -12,10 +12,15 @@ formula applied once per group — `sum(double)` never reaches an oracle hash.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_medical_analysis_spark.operators.common import cents
+from big_data_medical_analysis_spark.operators.common import (
+    cents,
+    checkpoint_pinned,
+    md5_int,
+    weight_below,
+)
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
 
@@ -23,6 +28,12 @@ from big_data_medical_analysis_spark.sources.readers import read_table
 def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     for n in names:
         read_table(spark, sf_dir, n).createOrReplaceTempView(n)
+
+
+def _exp1_hash() -> Column:
+    """Experiment-arm hash ``md5_int(user_id ':exp1')`` shared by the A/B,
+    survival, CUPED, power and DiD queries; the arm is its parity."""
+    return md5_int(F.concat(F.col("user_id").cast("string"), F.lit(":exp1")))
 
 
 # ---------------------------------------------------------------------------
@@ -474,13 +485,12 @@ def chisq_event_type_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # but has SIX downstream consumers (row/col marginals, total, R, C,
     # and the statistic join); unpinned, each consumer re-derives the
     # events scan + join + aggregate (12 parquet scans in the executed
-    # plan). localCheckpoint materializes the 25-row table once — the
+    # plan). checkpoint_pinned materializes the 25-row table once — the
     # same persist-the-derived-table pattern as _brand_baskets.
-    cells = (
+    cells = checkpoint_pinned(
         ev.join(F.broadcast(cust), "user_id")
         .groupBy("event_type", "segment")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     r = cells.groupBy("event_type").agg(F.sum("n").alias("rn"))
     cl = cells.groupBy("segment").agg(F.sum("n").alias("cn"))
@@ -817,15 +827,7 @@ def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan calibrates any scored 100 TB eval set.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":score"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.concat(F.col("vec_id").cast("string"), F.lit(":score")))
     scored = emb.select(
         h.alias("h"),
         F.when(F.col("label") >= 5, F.lit(1)).otherwise(F.lit(0)).alias("y"),
@@ -898,10 +900,7 @@ def feature_hash_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("feat"),
         )
     )
-    dim = F.pmod(
-        F.conv(F.substring(F.md5("feat"), 1, 8), 16, 10).cast("long"),
-        F.lit(FEATURE_HASH_DIM),
-    ).cast("int")
+    dim = F.pmod(md5_int("feat"), F.lit(FEATURE_HASH_DIM)).cast("int")
     return feats.select("user_id", dim.alias("dim")).groupBy(
         "user_id", "dim"
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -956,15 +955,7 @@ def roc_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables; broadcast everywhere.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":score"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.concat(F.col("vec_id").cast("string"), F.lit(":score")))
     scored = emb.select(
         F.floor(h * 10 / F.lit(4294967296)).cast("int").alias("bin"),
         F.when(F.col("label") >= 5, F.lit(1)).otherwise(F.lit(0)).alias("y"),
@@ -1150,19 +1141,7 @@ def ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = read_table(spark, sf_dir, "events")
     arm = F.when(
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":exp1"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(2),
-        )
-        == 0,
+        F.pmod(_exp1_hash(), F.lit(2)) == 0,
         F.lit("A"),
     ).otherwise(F.lit("B"))
     assign = ev.select(
@@ -1252,15 +1231,7 @@ def fairness_parity_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer")
     pred = (
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("c_custkey").cast("string"), F.lit(":clf"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            md5_int(F.concat(F.col("c_custkey").cast("string"), F.lit(":clf"))),
             F.lit(100),
         )
         < 40
@@ -1364,12 +1335,7 @@ def kfold_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_mktsegment"
     )
     fold = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(TARGET_ENC_FOLDS),
+        md5_int(F.col("o_orderkey").cast("string")), F.lit(TARGET_ENC_FOLDS)
     ).cast("int")
     base = (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -1482,9 +1448,6 @@ def kaplan_meier_signup_to_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     event, censor) triple — e.g. diagnosis→remission in the medical
     setting the reference's domain implies.
     """
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
     from pyspark.sql import Window as W
 
     ev = checkpoint_pinned(
@@ -1678,9 +1641,6 @@ def logrank_test_by_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) and a 1-row statistic. The arm column generalizes to any
     cohort label (treatment, region, model version).
     """
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
     from pyspark.sql import Window as W
 
     ev = checkpoint_pinned(
@@ -1706,19 +1666,7 @@ def logrank_test_by_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     censor = F.broadcast(ev.agg(F.max("es").alias("ce")))
     arm = F.when(
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":exp1"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(2),
-        )
-        == 0,
+        F.pmod(_exp1_hash(), F.lit(2)) == 0,
         F.lit("A"),
     ).otherwise(F.lit("B"))
     cohort = (
@@ -1868,20 +1816,9 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan -> 10-key combine -> arithmetic on 10-row tables,
     broadcast everywhere.
     """
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":lift"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.concat(F.col("vec_id").cast("string"), F.lit(":lift")))
     scored = emb.select(
         F.least(
             F.lit(9),
@@ -2026,9 +1963,6 @@ def feature_info_gain_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is on ≤26-row tables. The 1-row median broadcast is the
     only second pass over the fact (2 scans total, in budget).
     """
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
 
     orders = read_table(spark, sf_dir, "orders")
     oc = orders.select(
@@ -2198,10 +2132,6 @@ def auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum helper this query, Gini, and the conformal quantile all
     ride, hypothesis-pinned against brute force) so one materialization
     serves them, not three fact scans."""
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-        weight_below,
-    )
 
     orders = read_table(spark, sf_dir, "orders")
     base = orders.select(
@@ -2317,9 +2247,6 @@ def woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to Σ|domain| ≈ 10 cells map-side and all WOE arithmetic
     runs on that cell table. Cells are checkpoint-pinned — the totals
     branch and the final join read one materialization."""
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
 
     orders = read_table(spark, sf_dir, "orders")
     oc = orders.select(
@@ -2460,10 +2387,6 @@ def gini_customer_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~25-row broadcast range join → 5-row output. Uniform synthetic
     per-customer sums land near the n·σ/μ-driven floor (≈0.18) — a
     hand-checked 4-value fixture pins the arithmetic in pytest."""
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-        weight_below,
-    )
 
     orders = read_table(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer")
@@ -2580,9 +2503,6 @@ def jackknife_mean_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     block the group-jackknife SE here is a design-based estimate of the
     cluster-level sampling error. The pytest re-derives the SE in Python
     from the same per-group sums and pins the uniform-data magnitude."""
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
 
     orders = read_table(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer")
@@ -2748,24 +2668,13 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     third operator on that machinery, after AUC and Gini). One fact
     scan feeds the pinned base; everything downstream is score-axis
     sized."""
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-        weight_below,
-    )
 
     orders = read_table(spark, sf_dir, "orders")
     base = checkpoint_pinned(
         orders.select(
             F.col("o_orderpriority").alias("prio"),
             cents("o_totalprice").alias("y"),
-            (
-                F.conv(
-                    F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("long")
-                % 3
-            ).alias("fold"),
+            (md5_int(F.col("o_orderkey").cast("string")) % 3).alias("fold"),
         )
     )
     model = (
@@ -2908,9 +2817,6 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine; θ and ρ² from DECIMAL(38,0) power sums (the
     ``corr_covar_price_qty`` discipline) applied once; per-arm means
     exact integer ratios adjusted in a fixed-order expression."""
-    from big_data_medical_analysis_spark.operators.common import (
-        checkpoint_pinned,
-    )
 
     ev = read_table(spark, sf_dir, "events")
     # midpoint in integer epoch MICROSECONDS — interval/2 is an engine
@@ -2923,18 +2829,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mid_us")
     )
     mid_pred = F.unix_micros(F.col("ts")) < F.col("mid_us")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":exp1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = _exp1_hash() % 2
     ux = checkpoint_pinned(
         ev.crossJoin(F.broadcast(span))
         .groupBy("user_id")
@@ -3064,18 +2959,7 @@ def ab_test_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     full double precision identically in both dialects. One user-level
     combine, a 2-row arm rollup, scalar arithmetic."""
     ev = read_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":exp1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = _exp1_hash() % 2
     ux = ev.groupBy("user_id").agg(
         F.sum(cents("value")).cast("long").alias("y"),
         F.first(arm).alias("arm"),
@@ -3194,18 +3078,7 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mid_us")
     )
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":exp1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = _exp1_hash() % 2
     cells = ev.crossJoin(F.broadcast(span)).select(
         arm.alias("arm"),
         F.when(F.unix_micros(F.col("ts")) >= F.col("mid_us"), 1)

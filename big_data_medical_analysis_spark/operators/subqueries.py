@@ -223,7 +223,7 @@ def order_chain_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
     run at depth too.
 
     Scale: the window/rollup stage is one shuffle on the recursion key;
-    both recursion inputs are materialized once (localCheckpoint),
+    both recursion inputs are materialized once (checkpoint_pinned),
     pre-partitioned on that key, sized by data volume (floored at 8
     partitions: at driver scales each step's frame is ~one row per
     customer-block, and defaultParallelism near-empty tasks per step are
@@ -234,7 +234,7 @@ def order_chain_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = ORDER_CHAIN_BLOCK
     n_rows = spark.table("orders").count()
     n = max(8, min(spark.sparkContext.defaultParallelism, n_rows // 100_000 + 1))
-    seq = (
+    seq = checkpoint_pinned(
         spark.sql(_SEQ_SQL)
         .selectExpr(
             "o_custkey",
@@ -249,14 +249,12 @@ def order_chain_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ROWS UNBOUNDED PRECEDING) AS pref",
         )
         .repartition(n, "o_custkey")
-        .localCheckpoint(eager=True)
     )
     seq.createOrReplaceTempView("order_chain_seq")
-    blocksums = (
+    blocksums = checkpoint_pinned(
         seq.groupBy("o_custkey", "blk")
         .agg(F.sum("order_cents").alias("bsum"))
         .repartition(n, "o_custkey")
-        .localCheckpoint(eager=True)
     )
     blocksums.createOrReplaceTempView("order_chain_blocksums")
     return spark.sql(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from big_data_medical_analysis_spark.operators.common import (
     checkpoint_pinned,
     fan_out,
+    md5_int,
 )
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
@@ -690,15 +691,8 @@ def token_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(PACK_SHARDS),
-            )
+        F.pmod(
+            md5_int(F.col("doc_id").cast("string")), F.lit(PACK_SHARDS)
         ).alias("shard"),
     )
     w = (
@@ -1534,10 +1528,7 @@ def dsir_select(docs: DataFrame) -> DataFrame:
         "source",
         F.explode(F.concat(toks, bigrams)).alias("gram"),
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
-        % DSIR_BUCKETS
-    )
+    bucket = md5_int(F.col("gram")) % DSIR_BUCKETS
     # db feeds three consumers (raw counts, target counts, per-doc join):
     # count once, checkpoint, reuse — the kmeans-vm rescan argument.
     db = checkpoint_pinned(

@@ -804,7 +804,7 @@ def user_type_breakdown_tws(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming HLL state maintenance (round 9): foreachBatch register merge
+# Streaming state maintenance (round 9): ledgered foreachBatch state folds
 # ---------------------------------------------------------------------------
 
 
@@ -858,108 +858,25 @@ def _commit_state_swap(
         shutil.rmtree(old)
 
 
-def make_hll_state_merger(state_dir: str):
-    """``foreachBatch`` function that folds each micro-batch's per-day HLL
-    registers into a persisted (day, register, rho) parquet state table —
-    the STREAMING form of ``sketches.hll_incremental_daily``'s state
-    build: the batch query materializes the whole table at once; this
-    merger maintains the same table incrementally as events arrive.
-
-    Merge semantics are register-max (associative, commutative,
-    IDEMPOTENT — max(a, a) = a), which is what makes the fold safe under
-    Structured Streaming's at-least-once foreachBatch replay: a
-    redelivered batch re-maxes the same rhos and changes nothing, so
-    checkpoint + this merger is effectively-once WITHOUT the batch_id
-    bookkeeping the row-appending sink needs. The swap is
-    write-new-then-replace (never read+overwrite one path in a single
-    job — the lazy read would see its own deletes): new state lands in a
-    staging dir, then replaces the current table.
-
-    The two-rename swap is NOT atomic, so every merge begins with
-    RECOVERY over the swap's crash windows (review r9 — without this, a
-    crash between the renames lost the whole accumulated table on
-    replay, and a crash before the leftover cleanup wedged the stream on
-    ENOTEMPTY): if ``current`` is missing, promote the newest COMPLETE
-    staging table (parquet ``_SUCCESS`` marker — a half-written staging
-    is never trusted) or else restore the displaced ``old_*`` copy; then
-    delete every leftover ``staging_*``/``old_*``. Re-merging a batch
-    against recovered post-merge state is exactly the idempotent case.
-
-    Scale: per-batch work is one (day, register) partial aggregate over
-    the batch plus a merge against a table bounded by days × m registers
-    — KBs; the raw events are never re-read. The same shape runs on a
-    cluster with a transactional table format (commit replaces the
-    swap+recovery entirely).
-    """
-    import os
-
-    from big_data_medical_analysis_spark.operators.sketches import (
-        daily_event_registers,
-    )
-
-    cur_dir = os.path.join(state_dir, "current")
-
-    def _complete(staging: str) -> bool:
-        return os.path.exists(os.path.join(staging, "_SUCCESS"))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_state_swap(state_dir, cur_dir, _complete)
-        new = daily_event_registers(batch_df)
-        if os.path.exists(cur_dir):
-            cur = spark.read.parquet(cur_dir)
-            new = (
-                cur.unionByName(new)
-                .groupBy("day", "register")
-                .agg(F.max("rho").alias("rho"))
-            )
-        staging = os.path.join(state_dir, f"staging_{batch_id}")
-        new.write.mode("overwrite").parquet(staging)
-        _commit_state_swap(state_dir, cur_dir, staging, batch_id)
-
-    return _merge
-
-
-def hll_state_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental HLL state maintenance stream: event files →
-    per-batch register build → idempotent register-max merge into the
-    persisted state table. ``available_now=True``: backfill shape (see
-    ``_start_foreach_batch``)."""
-    return _start_foreach_batch(
-        read_event_stream(spark, input_dir),
-        make_hll_state_merger(state_dir),
-        checkpoint,
-        available_now,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming histogram state maintenance (round 9): exactly-once bin-sum fold
-# ---------------------------------------------------------------------------
-
 # Underscore prefix => Spark's parquet reader ignores it as a data file, so
 # the ledger can live INSIDE the state table dir and swap atomically with it.
 HIST_APPLIED_FILE = "_applied_batches.json"
 
 
 def _ledgered_state_merger(state_dir: str, fold):
-    """``foreachBatch`` function for a NON-idempotent state fold — one
+    """``foreachBatch`` function for a state fold — one
     ``fold(batch_df, cur)`` returns the new state table from the batch and
     the current table (``cur`` is None before the first batch) — made
     exactly-once by batch_id bookkeeping: the set of applied batch ids is
     a JSON ledger stored INSIDE the state table dir (underscore-prefixed,
     so Spark's reader ignores it), and a batch already in the ledger is
-    skipped wholesale. Because ledger and table live in one directory,
-    the write-new-then-replace swap commits them ATOMICALLY together —
-    state can never disagree with its ledger.
+    skipped wholesale. The new table is written to a staging dir that
+    then replaces ``current`` (never read and overwrite one path in one
+    job: the lazy read would see its own deletes). Because ledger and
+    table live in one directory, that swap commits them ATOMICALLY
+    together — state can never disagree with its ledger.
 
-    Crash windows (same two-rename swap as the HLL merger, shared
+    Crash windows (the two-rename swap of
     ``_recover_state_swap``/``_commit_state_swap``): a staging table
     counts as COMPLETE only when BOTH the parquet ``_SUCCESS`` marker and
     the ledger file exist — the ledger is written LAST, so a staging that
@@ -1001,16 +918,76 @@ def _ledgered_state_merger(state_dir: str, fold):
     return _merge
 
 
+def make_hll_state_merger(state_dir: str):
+    """``foreachBatch`` function that folds each micro-batch's per-day HLL
+    registers into a persisted (day, register, rho) parquet state table —
+    the STREAMING form of ``sketches.hll_incremental_daily``'s state
+    build: the batch query materializes the whole table at once; this
+    merger maintains the same table incrementally as events arrive.
+
+    The fold is register-max: associative, commutative and IDEMPOTENT
+    (max(a, a) = a), so a redelivered batch changes nothing — even one
+    replayed under a new batch id. It still goes through
+    ``_ledgered_state_merger``, so every state table shares one swap, one
+    crash recovery and one exactly-once path; the ledger is a local JSON
+    file and adds no Spark job.
+
+    Scale: per-batch work is one (day, register) partial aggregate over
+    the batch plus a merge against a table bounded by days × m registers
+    — KBs; the raw events are never re-read. The same shape runs on a
+    cluster with a transactional table format (commit replaces the
+    swap+recovery entirely).
+    """
+    from big_data_medical_analysis_spark.operators.sketches import (
+        daily_event_registers,
+    )
+
+    def _fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
+        new = daily_event_registers(batch_df)
+        if cur is None:
+            return new
+        return (
+            cur.unionByName(new)
+            .groupBy("day", "register")
+            .agg(F.max("rho").alias("rho"))
+        )
+
+    return _ledgered_state_merger(state_dir, _fold)
+
+
+def hll_state_stream(
+    spark: SparkSession,
+    input_dir: str,
+    state_dir: str,
+    checkpoint: str,
+    available_now: bool = False,
+):
+    """Start the incremental HLL state maintenance stream: event files →
+    per-batch register build → idempotent register-max merge into the
+    persisted state table. ``available_now=True``: backfill shape (see
+    ``_start_foreach_batch``)."""
+    return _start_foreach_batch(
+        read_event_stream(spark, input_dir),
+        make_hll_state_merger(state_dir),
+        checkpoint,
+        available_now,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Streaming histogram state maintenance (round 9): exactly-once bin-sum fold
+# ---------------------------------------------------------------------------
+
+
 def make_hist_state_merger(state_dir: str):
     """``foreachBatch`` function that folds each micro-batch's per-day
     histogram bin counts into a persisted (day, bin, cnt) parquet state
     table — the streaming form of
-    ``sketches.histogram_incremental_daily``'s state build, and the
-    DELIBERATE CONTRAST to ``make_hll_state_merger``: bin-count SUM is
-    associative and commutative but NOT idempotent (sum(a, a) = 2a), so
-    at-least-once foreachBatch replay WOULD double-count. Exactly-once
-    therefore goes through the applied-batch ledger of
-    ``_ledgered_state_merger``.
+    ``sketches.histogram_incremental_daily``'s state build. Unlike the HLL
+    register-max fold, bin-count SUM is NOT idempotent (sum(a, a) = 2a):
+    at-least-once foreachBatch replay WOULD double-count, and here the
+    applied-batch ledger of ``_ledgered_state_merger`` is what makes the
+    fold exactly-once.
 
     Scale: per-batch work is one map-side-combinable (day, bin) aggregate
     over the batch plus a merge against a table bounded by days × bins —

@@ -12,13 +12,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from big_data_medical_analysis_spark import registry  # noqa: E402
 from big_data_medical_analysis_spark.session import get_spark  # noqa: E402
