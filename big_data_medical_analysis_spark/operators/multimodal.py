@@ -215,7 +215,11 @@ def decode_png(content: bytes) -> np.ndarray:
             if y:
                 acc += out[y - 1]
             out[y:y2] = acc
-        else:  # Average (3) / Paeth (4): reconstructed-left dependence
+        else:
+            # Average (3) / Paeth (4): reconstructed-left dependence. Both
+            # are live inside queries: png_decode_stats and
+            # pkl_png_roundtrip encode with filter type img_id % 5, so
+            # two images in five take this per-byte path.
             for yy in range(y, y2):
                 line = bytearray(lines[yy].tobytes())
                 prev = out[yy - 1].tobytes() if yy else bytes(w)

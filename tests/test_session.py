@@ -1,6 +1,9 @@
-"""Session profile: the driver heap is sized to the box it runs on."""
+"""Session profile: the driver heap is sized to the box it runs on, and the
+Python workers run under the engine daemon from the package root."""
 
 from __future__ import annotations
+
+import os
 
 from big_data_medical_analysis_spark import session
 
@@ -40,3 +43,25 @@ def test_mem_total_unreadable_meminfo(monkeypatch):
         else real_open(path, *a, **k),
     )
     assert session._mem_total_kib() is None
+
+
+def test_extra_conf_wins_and_workers_see_the_package_root():
+    """The profile runs workers under the engine daemon from the package
+    root; a caller's daemon module wins outright, and a caller's
+    PYTHONPATH keeps its entries first with the root appended once."""
+    root = session._PACKAGE_ROOT
+    conf = session._profile(None)
+    assert conf["spark.python.daemon.module"] == (
+        "big_data_medical_analysis_spark.pyworker")
+    assert conf["spark.executorEnv.PYTHONPATH"] == root
+    conf = session._profile({
+        "spark.python.daemon.module": "pyspark.daemon",
+        "spark.executorEnv.PYTHONPATH": f"lib_a{os.pathsep}{root}{os.pathsep}lib_b",
+        "spark.driver.memory": "2g",
+    })
+    assert conf["spark.python.daemon.module"] == "pyspark.daemon"
+    assert conf["spark.executorEnv.PYTHONPATH"] == (
+        f"lib_a{os.pathsep}{root}{os.pathsep}lib_b")
+    assert conf["spark.driver.memory"] == "2g"
+    conf = session._profile({"spark.executorEnv.PYTHONPATH": "lib_a"})
+    assert conf["spark.executorEnv.PYTHONPATH"] == f"lib_a{os.pathsep}{root}"
