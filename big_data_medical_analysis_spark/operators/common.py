@@ -25,9 +25,36 @@ rebuilds the identical value and checks it, not just a row count. k is
 must not collide); 16 digits would overflow a signed BIGINT in both
 engines, so k is limited to 1..15. Salts are part of the key
 (``concat(key, ':salt')``), never a second hash function.
+
+Scratch state — the files a query writes and then reads back lazily (CSV,
+JSONL, ORC and XML roundtrips, persisted indexes and state tables, the
+twin's label CSVs, bucketed tables) — belongs to ONE invocation.
+``invocation_dir(name)`` returns a fresh directory and
+``invocation_table(base)`` a fresh catalog table name, both numbered from
+one process-wide counter; no operator names scratch state by
+``(user, sf)``. A shared name is a quiet wrong answer: a second call
+overwrites the files that a first call's still-unexecuted DataFrame will
+read, whether the second call is the same query at another scale or the
+same query on another thread. Directories live under one
+``per_user_tmpdir`` root (owner, mode and symlink checked), in a
+subdirectory owned by the creating process, and each leaf is made with
+``os.mkdir`` so a clash fails loudly. Their lifetime is the process: a
+returned DataFrame may be collected long after its Python object is gone
+(derived frames do not keep their parent alive), so nothing is released
+early; the process removes its own subdirectory at interpreter exit (never
+from a forked child), and its first call removes the subdirectories of
+processes that no longer exist (OOM-kills, ``timeout -k``).
 """
 
 from __future__ import annotations
+
+import atexit
+import itertools
+import os
+import shutil
+import stat
+import tempfile
+import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -146,10 +173,6 @@ def per_user_tmpdir(name: str) -> str:
     fixture scaffolding only; on a real cluster these intermediates live
     on job-scoped shared storage and this concept does not exist.
     """
-    import os
-    import stat
-    import tempfile
-
     root = os.path.join(tempfile.gettempdir(), f"{name}_{os.getuid()}")
     # Symlink squat: an attacker pre-plants a symlink at the predictable
     # path aimed at a victim-owned dir — makedirs(exist_ok=True) accepts
@@ -176,6 +199,62 @@ def per_user_tmpdir(name: str) -> str:
             "refusing to use a squattable scratch root"
         )
     return root
+
+
+# Process-wide numbering of invocation directories and tables, and this
+# process's scratch subdirectory as (owning pid, path).
+_CALLS = itertools.count()
+_PROCESS_DIR: tuple[int, str] | None = None
+_PROCESS_DIR_LOCK = threading.Lock()
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # exists, owned by another uid
+        return True
+    return True
+
+
+def _remove_process_dir(pid: int, path: str) -> None:
+    if os.getpid() == pid:  # a forked child inherits this handler
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _process_dir() -> str:
+    """This process's ``<pid>-<random>`` subdirectory of the scratch root.
+    The first call in a process sweeps the subdirectories of dead pids
+    and registers the exit-time removal."""
+    global _PROCESS_DIR
+    pid = os.getpid()
+    with _PROCESS_DIR_LOCK:
+        if _PROCESS_DIR is None or _PROCESS_DIR[0] != pid:
+            root = per_user_tmpdir("spark_graft_scratch")
+            for entry in os.listdir(root):
+                owner = entry.split("-", 1)[0]
+                if owner.isdigit() and not _pid_alive(int(owner)):
+                    shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+            path = tempfile.mkdtemp(prefix=f"{pid}-", dir=root)
+            atexit.register(_remove_process_dir, pid, path)
+            _PROCESS_DIR = (pid, path)
+        return _PROCESS_DIR[1]
+
+
+def invocation_dir(name: str) -> str:
+    """A fresh, empty directory that belongs to this one call (see the
+    module docstring for the scratch contract and its lifetime)."""
+    path = os.path.join(_process_dir(), f"{name}_{next(_CALLS)}")
+    os.mkdir(path, 0o700)
+    return path
+
+
+def invocation_table(base: str) -> str:
+    """A fresh catalog table name for this one call:
+    ``<base>_<uid>_<pid>_<n>``. Callers keep the table's files under an
+    ``invocation_dir`` (``option("path", ...)``), never in the warehouse."""
+    return f"{base}_{os.getuid()}_{os.getpid()}_{next(_CALLS)}"
 
 
 def cents(col: Column | str, scale: int = 100) -> Column:

@@ -29,8 +29,8 @@ The tiering is how 100 TB training-data dedup actually works:
 
 from __future__ import annotations
 
-import itertools
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -41,6 +41,8 @@ from big_data_medical_analysis_spark.operators.common import (
     es_key,
     explode_nonnull_pinned,
     fan_out,
+    invocation_dir,
+    invocation_table,
     md5_int,
 )
 from big_data_medical_analysis_spark.registry import register
@@ -718,11 +720,6 @@ def minhash_portable_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Per-call suffix for connected_components' bucketed edge table: two
-# concurrent calls in one driver must not drop each other's table.
-_CC_CALLS = itertools.count()
-
-
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
 ) -> DataFrame:
@@ -761,25 +758,21 @@ def connected_components(
     # ($SPARK_GRAFT_CC_EDGE_BUCKETS): the local default 8 matches the
     # BUCKET_N layout convention; in production size it to
     # ceil(edge_bytes / target_task_bytes) as with any bucketed fact.
-    # function-local import: etl does not import dedup, but keeping the
-    # dependency out of module scope makes that forever a non-cycle
-    from big_data_medical_analysis_spark.operators.etl import (
-        _drop_bucket_table,
-    )
-
     spark = edges.sparkSession
     und_rows = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
     n_buckets = int(os.environ.get("SPARK_GRAFT_CC_EDGE_BUCKETS", "8"))
-    t_edges = f"cc_edges_{os.getuid()}_{os.getpid()}_{next(_CC_CALLS)}"
-    _drop_bucket_table(spark, t_edges)
+    edges_dir = invocation_dir("cc_edges")
+    t_edges = invocation_table("cc_edges")
     # repartition on the bucket key first so each task writes exactly ONE
     # bucket file (the r16 bucketed-write convention; one file per bucket
     # is also what lets the scan report the per-bucket sort order)
     und_rows.repartition(n_buckets, "u").write.bucketBy(
         n_buckets, "u"
-    ).sortBy("u").mode("overwrite").saveAsTable(t_edges)
+    ).sortBy("u").option("path", os.path.join(edges_dir, "edges")).saveAsTable(
+        t_edges
+    )
     und = spark.table(t_edges)
     labels = (
         und.select(F.col("u").alias("node"))
@@ -842,9 +835,10 @@ def connected_components(
             prev_sum = cur_sum
     finally:
         # the final round's probe materialized `labels`, so the edge
-        # table is no longer referenced by the returned plan — clean up
-        # the warehouse dir (also on the no-fixpoint raise below)
-        _drop_bucket_table(spark, t_edges)
+        # table is no longer referenced by the returned plan — release it
+        # early (also on the no-fixpoint raise below)
+        spark.sql(f"DROP TABLE IF EXISTS {t_edges}")
+        shutil.rmtree(edges_dir, ignore_errors=True)
     if not converged:
         # Unconverged labels are silently WRONG cluster ids (they surface
         # only as a baffling oracle mismatch downstream) — fail loudly.
@@ -1544,23 +1538,6 @@ GROUP BY p.doc_id
 """
 
 
-def pmh_index_dir(sf_dir: str) -> str:
-    """Fixed per-user, per-sf location of the persisted signature index
-    (band-partitioned parquet). The root comes from common.per_user_tmpdir
-    — uid-suffixed, 0700, ownership-verified — so another local user can
-    neither pre-own the directory nor swap index files between the write
-    and the probe read. Per-sf so an sf0.01 driver pass never probes an
-    index built from sf0.1 documents."""
-    import os
-
-    from big_data_medical_analysis_spark.operators.common import (
-        per_user_tmpdir,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(per_user_tmpdir("spark_graft_pmh_index"), tag)
-
-
 def pmh_build_index(spark: SparkSession, sf_dir: str) -> str:
     """Build + persist the band-partitioned signature index over the 90%
     corpus slice — the amortized state a production dedup service
@@ -1570,22 +1547,24 @@ def pmh_build_index(spark: SparkSession, sf_dir: str) -> str:
     the probe wall: probe-only scaling is the production steady state
     (VERDICT r11 task 3)."""
     docs = read_table(spark, sf_dir, "documents")
-    out_dir = pmh_index_dir(sf_dir)
+    out_dir = invocation_dir("pmh_index")
     pmh_banded_buckets(docs.filter(F.expr(_PMH_INCR_INDEX))).write.mode(
         "overwrite"
     ).partitionBy("band").parquet(out_dir)
     return out_dir
 
 
-def pmh_probe_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe-only plan against the ALREADY-persisted signature index
-    (built by ``pmh_build_index``): the new batch bands itself and
-    equi-joins the persisted band table — the per-batch steady-state
-    cost a production pipeline pays, with the index build amortized
-    away."""
+def pmh_probe_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> DataFrame:
+    """Probe-only plan against the ALREADY-persisted signature index in
+    ``index_dir`` (as returned by ``pmh_build_index``): the new batch
+    bands itself and equi-joins the persisted band table — the per-batch
+    steady-state cost a production pipeline pays, with the index build
+    amortized away."""
     docs = read_table(spark, sf_dir, "documents")
     index = (
-        spark.read.parquet(pmh_index_dir(sf_dir))
+        spark.read.parquet(index_dir)
         .withColumnRenamed("doc_id", "index_doc_id")
         .withColumn("band", F.col("band").cast("int"))
     )
@@ -1643,8 +1622,7 @@ def minhash_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Build + persist the signature index (the "already have it" state a
     # real pipeline amortizes over every future batch). Band-partitioned:
     # a probe that only needs band b prunes to that directory.
-    pmh_build_index(spark, sf_dir)
-    return pmh_probe_index(spark, sf_dir)
+    return pmh_probe_index(spark, sf_dir, pmh_build_index(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -26,9 +26,10 @@ from big_data_medical_analysis_spark.operators.common import (
     cents,
     checkpoint_pinned,
     es_key,
+    invocation_dir,
+    invocation_table,
     md5_int,
     money_sum,
-    per_user_tmpdir,
 )
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
@@ -342,17 +343,15 @@ def csv_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     value (doubles survive the text roundtrip via Java's shortest-repr
     formatting; int64-cents summation keeps the hash order-independent).
 
-    The shard directory is a FIXED per-user path reused across invocations
-    (the write job runs mode=overwrite), not a fresh mkdtemp — repeated
-    harness/bench passes previously leaked one temp dir per call. The
-    eager write at construction time is inherent to a write→read
-    roundtrip query (the glob scan needs the files to exist to plan)."""
+    The shards go to this call's ``invocation_dir``. The eager write at
+    construction time is inherent to a write→read roundtrip query (the
+    glob scan needs the files to exist to plan)."""
 
     from big_data_medical_analysis_spark.operators.common import money_sum
     from big_data_medical_analysis_spark.schemas import CUSTOMER
     from big_data_medical_analysis_spark.sources.readers import read_csv
 
-    out_dir = per_user_tmpdir("spark_graft_csv_roundtrip")
+    out_dir = invocation_dir("csv_roundtrip")
     customer = read_table(spark, sf_dir, "customer")
     write_client_shards_csv(customer, ["c_custkey"], 4, out_dir)
     back = read_csv(spark, f"{out_dir}/client=*/*.csv", CUSTOMER)
@@ -376,10 +375,9 @@ GROUP BY o_orderstatus
 @register("partitioned_parquet_prune", oracle=_PARTITIONED_PRUNE_SQL, category="etl")
 def partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned parquet write → partition-PRUNED read-back: orders
-    written once per session partitioned by o_orderpriority (5 directory
-    partitions, mode=overwrite into a fixed per-user path like
-    ``csv_roundtrip_revenue``), then scanned with a filter on the partition
-    column and aggregated exactly.
+    written partitioned by o_orderpriority (5 directory partitions, into
+    this call's ``invocation_dir``), then scanned with a filter on the
+    partition column and aggregated exactly.
 
     This is the layout half of scale design the rest of the catalog can't
     show: at 100 TB, a popular predicate column as a partition key means
@@ -393,7 +391,7 @@ def partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_medical_analysis_spark.operators.common import money_sum
 
-    out_dir = per_user_tmpdir("spark_graft_partitioned_orders")
+    out_dir = invocation_dir("partitioned_orders")
     orders = read_table(spark, sf_dir, "orders")
     # Cluster by the partition key before the write: each task then owns
     # whole partition values and writes one file per value, instead of
@@ -685,9 +683,7 @@ def orc_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet directly, so a green row proves the ORC write+read preserved
     every row and value (doubles are stored natively, no text roundtrip).
 
-    Same fixed-per-user-path, mode=overwrite discipline as
-    ``csv_roundtrip_revenue``; the eager write is inherent to a
-    write→read roundtrip query.
+    The eager write is inherent to a write→read roundtrip query.
 
     Scale: ORC gives the same pushdown/pruning class as parquet (stripe
     statistics, predicate pushdown, column projection); the roundtrip
@@ -698,7 +694,7 @@ def orc_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_medical_analysis_spark.operators.common import money_sum
     from big_data_medical_analysis_spark.schemas import SUPPLIER
 
-    out_dir = per_user_tmpdir("spark_graft_orc_roundtrip")
+    out_dir = invocation_dir("orc_roundtrip")
     supplier = read_table(spark, sf_dir, "supplier")
     supplier.write.mode("overwrite").orc(out_dir)
     back = spark.read.schema(SUPPLIER).orc(out_dir)
@@ -821,7 +817,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_medical_analysis_spark.operators.common import money_sum
 
-    out_dir = per_user_tmpdir("spark_graft_schema_evo")
+    out_dir = invocation_dir("schema_evo")
     orders = read_table(spark, sf_dir, "orders")
     old_cols = ["o_orderkey", "o_custkey", "o_totalprice"]
     orders.filter(F.col("o_orderkey") % 2 == 0).select(old_cols).write.mode(
@@ -960,8 +956,7 @@ def jsonl_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doubles survive JSON via shortest-repr printing and exact re-parse),
     and the DateType columns ('yyyy-MM-dd' text both ways).
 
-    Same fixed-per-user-path, mode=overwrite discipline as the CSV/ORC
-    roundtrips; the eager write is inherent to a write→read query.
+    The eager write is inherent to a write→read query.
 
     Scale: JSONL is the interchange tier, not the analytics tier — no
     pushdown, no pruning, full-text parse per row (the docstring IS the
@@ -973,7 +968,7 @@ def jsonl_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_medical_analysis_spark.operators.common import money_sum
     from big_data_medical_analysis_spark.sources.readers import read_json
 
-    out_dir = per_user_tmpdir("spark_graft_jsonl_roundtrip")
+    out_dir = invocation_dir("jsonl_roundtrip")
     cols = [
         "o_orderkey",
         "o_orderstatus",
@@ -1022,16 +1017,6 @@ CORRUPT_JSONL_FIELDS = (
 )
 
 
-def corrupt_jsonl_dir(sf_dir: str) -> str:
-    """Per-user, per-sf location of the malformed-batch fixture — shared
-    with tests so the path/tag can never drift between the query and its
-    quarantine-content assertions."""
-    return os.path.join(
-        per_user_tmpdir("spark_graft_corrupt_jsonl"),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def corrupt_jsonl_schema():
     from pyspark.sql import types as T
 
@@ -1071,7 +1056,7 @@ def corrupt_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from big_data_medical_analysis_spark.operators.common import cents
 
-    out_dir = corrupt_jsonl_dir(sf_dir)
+    out_dir = invocation_dir("corrupt_jsonl")
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1140,7 +1125,7 @@ def xml_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from big_data_medical_analysis_spark.operators.common import money_sum
 
-    out_dir = per_user_tmpdir("spark_graft_xml_roundtrip")
+    out_dir = invocation_dir("xml_roundtrip")
     cols = ["c_custkey", "c_nationkey", "c_acctbal"]
     cust = read_table(spark, sf_dir, "customer").select(*cols)
     (
@@ -1306,14 +1291,13 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the post-pruning semantics directly on the source
     parquet (the dim join is values-neutral by construction).
 
-    Scale: fixed-per-user overwrite path like every roundtrip query; the
-    broadcast dim doubles as the DPP filter source, so pruning reuses the
-    broadcast rather than running an extra job.
+    Scale: the broadcast dim doubles as the DPP filter source, so pruning
+    reuses the broadcast rather than running an extra job.
     """
 
     from big_data_medical_analysis_spark.operators.common import cents
 
-    out_dir = per_user_tmpdir("spark_graft_dpp")
+    out_dir = invocation_dir("dpp")
     orders = read_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out_dir)
     fact = spark.read.parquet(out_dir)
@@ -1342,31 +1326,22 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 BUCKET_N = 8
 
 
-def _drop_bucket_table(spark: SparkSession, name: str) -> None:
-    """Drop a managed table AND its warehouse directory. A fresh session's
-    in-memory catalog doesn't know tables a previous session wrote, so
-    ``DROP TABLE IF EXISTS`` alone leaves the old location on disk and the
-    next ``saveAsTable`` fails with LOCATION_ALREADY_EXISTS."""
-    import shutil
-    from urllib.parse import urlparse
+def _bucketed_table(df: DataFrame, key: str, base: str, files: str) -> DataFrame:
+    """``df`` written as a ``BUCKET_N``-bucketed table sorted by ``key``,
+    named by ``invocation_table(base)``, its files under ``files``; read
+    back as that table.
 
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-    loc = os.path.join(wh.path or wh.geturl(), name)
-    if os.path.isdir(loc):
-        shutil.rmtree(loc)
-
-
-def _bucket_table_name(base: str, sf_dir: str) -> str:
-    """Session-collision-proof managed-table name: ``<base>_<sftag>_<uid>``.
-    Fixed global names let two concurrent sessions on the same checkout
-    (bench + tests) drop each other's in-flight bucketed tables mid-query;
-    suffixing by sf tag and uid gives each (user, scale) pair its own
-    table, mirroring per_user_tmpdir's per-user discipline. (Concurrent
-    same-user same-sf sessions remain single-writer by assumption, as any
-    shared managed table is.)"""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    return f"{base}_{tag}_{os.getuid()}"
+    Round 16: repartition on the bucket key to BUCKET_N before the
+    bucketed write — repartition's HashPartitioning is the same
+    pmod(murmur3) the bucket spec uses, so each task writes exactly ONE
+    bucket file (before: the 1-3 scan tasks each wrote up to BUCKET_N
+    small files, serializing the write and fragmenting the read; guide §6
+    output file sizing). Table contents identical."""
+    name = invocation_table(base)
+    df.repartition(BUCKET_N, key).write.bucketBy(BUCKET_N, key).sortBy(
+        key
+    ).option("path", os.path.join(files, base)).saveAsTable(name)
+    return df.sparkSession.table(name)
 
 
 _BUCKETED_JOIN_SQL = """
@@ -1383,7 +1358,7 @@ GROUP BY 1
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shuffle-free big-big join — the layout investment that pays for
     itself at 100 TB: orders and lineitem are written ONCE as
-    ``bucketBy({BUCKET_N}, orderkey) + sortBy`` managed tables, and every
+    ``bucketBy({BUCKET_N}, orderkey) + sortBy`` tables, and every
     subsequent join on the bucket key reads co-located buckets directly —
     the executed plan has a SortMergeJoin with NO Exchange on either
     input (pinned in tests/test_plans.py); the only shuffle left in the
@@ -1411,24 +1386,9 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    t_orders = _bucket_table_name("bj_orders", sf_dir)
-    t_li = _bucket_table_name("bj_lineitem", sf_dir)
-    _drop_bucket_table(spark, t_orders)
-    _drop_bucket_table(spark, t_li)
-    # Round 16: repartition on the bucket key to BUCKET_N before the
-    # bucketed write — repartition's HashPartitioning is the same
-    # pmod(murmur3) the bucket spec uses, so each task writes exactly ONE
-    # bucket file (before: the 1-3 scan tasks each wrote up to BUCKET_N
-    # small files, serializing the write and fragmenting the read;
-    # guide §6 output file sizing). Table contents identical.
-    orders.repartition(BUCKET_N, "o_orderkey").write.bucketBy(
-        BUCKET_N, "o_orderkey"
-    ).sortBy("o_orderkey").mode("overwrite").saveAsTable(t_orders)
-    li.repartition(BUCKET_N, "l_orderkey").write.bucketBy(
-        BUCKET_N, "l_orderkey"
-    ).sortBy("l_orderkey").mode("overwrite").saveAsTable(t_li)
-    o = spark.table(t_orders).hint("merge")
-    l = spark.table(t_li)
+    files = invocation_dir("bucketed_join")
+    o = _bucketed_table(orders, "o_orderkey", "bj_orders", files).hint("merge")
+    l = _bucketed_table(li, "l_orderkey", "bj_lineitem", files)
     return (
         o.join(l, o.o_orderkey == l.l_orderkey)
         .groupBy("o_orderpriority")
@@ -1491,20 +1451,9 @@ def bucketed_fact_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    t_orders = _bucket_table_name("bj3_orders", sf_dir)
-    t_li = _bucket_table_name("bj3_lineitem", sf_dir)
-    _drop_bucket_table(spark, t_orders)
-    _drop_bucket_table(spark, t_li)
-    # Round 16: same one-file-per-bucket parallel write as
-    # bucketed_colocated_join (repartition on the bucket key first).
-    orders.repartition(BUCKET_N, "o_orderkey").write.bucketBy(
-        BUCKET_N, "o_orderkey"
-    ).sortBy("o_orderkey").mode("overwrite").saveAsTable(t_orders)
-    li.repartition(BUCKET_N, "l_orderkey").write.bucketBy(
-        BUCKET_N, "l_orderkey"
-    ).sortBy("l_orderkey").mode("overwrite").saveAsTable(t_li)
-    o = spark.table(t_orders)
-    l = spark.table(t_li)
+    files = invocation_dir("bucketed_chain")
+    o = _bucketed_table(orders, "o_orderkey", "bj3_orders", files)
+    l = _bucketed_table(li, "l_orderkey", "bj3_lineitem", files)
     # Dimension first, INSIDE the bucketed leg: BHJ streams the bucketed
     # orders scan unchanged, so the downstream merge join still sees
     # HashPartitioning(o_orderkey, BUCKET_N) and elides both exchanges.
@@ -1557,10 +1506,7 @@ def file_provenance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     files without re-reading healthy ones (partition pruning applies to
     the audit itself).
     """
-    out_dir = os.path.join(
-        per_user_tmpdir("spark_graft_provenance"),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out_dir = invocation_dir("provenance")
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
@@ -1636,10 +1582,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    root = os.path.join(
-        per_user_tmpdir("spark_graft_compaction"),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    root = invocation_dir("compaction")
     small_dir = os.path.join(root, "small")
     compact_dir = os.path.join(root, "compacted")
     orders = read_table(spark, sf_dir, "orders").select(
@@ -2294,11 +2237,7 @@ def user_erasure_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, the ``compact_small_files`` sink discipline (write job ≠
     expression). The anti-join side is a broadcast of the deletion list
     at production scale; the modulus stands in for it portably."""
-    root = os.path.join(
-        per_user_tmpdir("spark_graft_erasure"),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    out_dir = os.path.join(root, "events_rewritten")
+    out_dir = os.path.join(invocation_dir("erasure"), "events_rewritten")
     ev = read_table(spark, sf_dir, "events")
     erased = F.pmod(F.col("user_id"), F.lit(ERASE_EVERY)) == ERASE_RESIDUE
     ev.filter(~erased).write.mode("overwrite").parquet(out_dir)

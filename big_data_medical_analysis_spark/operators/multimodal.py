@@ -48,7 +48,7 @@ from pyspark.sql.functions import pandas_udf
 from big_data_medical_analysis_spark.operators.common import (
     checkpoint_pinned,
     fan_out,
-    per_user_tmpdir,
+    invocation_dir,
 )
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
@@ -779,9 +779,10 @@ def pkl_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     'cxr_img' tensor's first channel, render grayscale, save a PNG):
 
     1. a deterministic GradCAM-style pickle corpus ({'cxr_img': float32
-       (1,H,W), 'task', 'gt'}) is written once per session via
-       ``foreachPartition`` (deterministic file names — idempotent under
-       task retry, same discipline as ``write_images``);
+       (1,H,W), 'task', 'gt'}) is written to this call's
+       ``invocation_dir`` via ``foreachPartition`` (deterministic file
+       names — idempotent under task retry, same discipline as
+       ``write_images``);
     2. ``binaryFile`` scan reads the .pkl blobs back (the
        ``read_pickle_blobs`` ingest surface);
     3. ONE fused mapInPandas pass unpickles, min-max renders the tensor to
@@ -797,11 +798,9 @@ def pkl_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions — no shuffle until the final tiny per-task aggregate; each
     blob crosses the Arrow boundary exactly once.
     """
-    import os
-
     from big_data_medical_analysis_spark.sources.readers import read_binary_dir
 
-    out_dir = per_user_tmpdir("spark_graft_pkl_blobs")
+    out_dir = invocation_dir("pkl_blobs")
     docs = read_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("img_id")
     ).filter(F.col("img_id") < PKL_N_BLOBS)
@@ -811,7 +810,6 @@ def pkl_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os as _os
         import pickle
 
-        _os.makedirs(out_dir, exist_ok=True)
         for r in rows:
             i = int(r["img_id"])
             rng = np.random.RandomState(i % (2**31))

@@ -76,7 +76,7 @@ from pyspark.sql import types as T
 from big_data_medical_analysis_spark.operators.common import (
     checkpoint_pinned,
     fan_out,
-    per_user_tmpdir,
+    invocation_dir,
 )
 from big_data_medical_analysis_spark.operators.multimodal import (
     IMG_SIDE,
@@ -126,11 +126,6 @@ _TWIN_YC = (
 )
 
 
-def _labels_root(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(per_user_tmpdir("spark_graft_chexpert"), tag)
-
-
 def write_label_csvs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the two label CSVs the reference ingests (test_labels
     used for TRAINING because it is the numerous file — the deliberate
@@ -141,8 +136,8 @@ def write_label_csvs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     downstream, mirroring the reference's hardcoded stratification label,
     :172-176). The train file carries PLANTED duplicate rows (every
     doc_id % 20 == 0) so the dedup guard has real work, like the raw
-    CheXpert label files the reference guards against. Idempotent
-    overwrite per call; distributed CSV write, read back by directory
+    CheXpert label files the reference guards against. Written to this
+    call's ``invocation_dir``; distributed CSV write, read back by directory
     glob — the reference's part-file glob+concat (federated :57-59) is a
     native multi-part scan here."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
@@ -158,7 +153,7 @@ def write_label_csvs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     train = labels.filter(F.col("doc_id") % 10 != 9)
     dup_tail = train.filter(F.col("doc_id") % 20 == 0)
     evald = labels.filter(F.col("doc_id") % 10 == 9)
-    root = _labels_root(sf_dir)
+    root = invocation_dir("chexpert_labels")
     train_dir = os.path.join(root, "test_labels_csv")  # the swap: trains
     eval_dir = os.path.join(root, "val_labels_csv")
     train.unionAll(dup_tail).drop("doc_id").write.mode("overwrite").option(

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from big_data_medical_analysis_spark.operators.common import (
     checkpoint_pinned,
     fan_out,
+    invocation_dir,
     md5_int,
 )
 from big_data_medical_analysis_spark.registry import register
@@ -1846,20 +1847,6 @@ def ann_lsh_buckets(emb: DataFrame) -> DataFrame:
     return sign_lsh_buckets(emb, ANN_LSH_TABLES, ANN_LSH_BITS)
 
 
-def ann_index_dir(sf_dir: str) -> str:
-    """Per-user, per-sf location of the persisted LSH index (table-
-    partitioned parquet) — same squat-proof root discipline as
-    dedup.pmh_index_dir."""
-    import os
-
-    from big_data_medical_analysis_spark.operators.common import (
-        per_user_tmpdir,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(per_user_tmpdir("spark_graft_ann_index"), tag)
-
-
 # DuckDB twin of the int64-micro quantization every sign-LSH family
 # starts from: CTE ``scaled`` (vec_id, iv) over the embeddings table.
 _SCALED_SQL = f"""scaled AS (
@@ -1962,21 +1949,23 @@ def ann_build_index(spark: SparkSession, sf_dir: str) -> str:
     probe-only scaling is the production steady state (VERDICT r11
     task 3)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    out_dir = ann_index_dir(sf_dir)
+    out_dir = invocation_dir("ann_index")
     ann_lsh_buckets(emb.filter(F.expr(_ANN_INDEX))).write.mode(
         "overwrite"
     ).partitionBy("tbl").parquet(out_dir)
     return out_dir
 
 
-def ann_probe_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe-only plan against the ALREADY-persisted LSH index (built by
-    ``ann_build_index``): the new batch buckets itself, (tbl, bucket)
-    equi-joins the persisted table, and candidates are exact-cosine
-    reranked — the per-batch steady-state cost with the index build
-    amortized away."""
+def ann_probe_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> DataFrame:
+    """Probe-only plan against the ALREADY-persisted LSH index in
+    ``index_dir`` (as returned by ``ann_build_index``): the new batch
+    buckets itself, (tbl, bucket) equi-joins the persisted table, and
+    candidates are exact-cosine reranked — the per-batch steady-state
+    cost with the index build amortized away."""
     emb = read_table(spark, sf_dir, "embeddings")
-    index = spark.read.parquet(ann_index_dir(sf_dir)).select(
+    index = spark.read.parquet(index_dir).select(
         F.col("vec_id").alias("cand_id"),
         F.col("tbl").cast("int").alias("tbl"),
         "bucket",
@@ -2078,8 +2067,7 @@ def ann_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     can time the two walls separately; this registered query remains
     build + probe end-to-end.
     """
-    ann_build_index(spark, sf_dir)
-    return ann_probe_index(spark, sf_dir)
+    return ann_probe_index(spark, sf_dir, ann_build_index(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -3616,19 +3604,6 @@ def adx_lsh_buckets(emb: DataFrame) -> DataFrame:
     return sign_lsh_buckets(emb, ADX_TABLES, ADX_BITS_MAX)
 
 
-def adx_index_dir(sf_dir: str) -> str:
-    """Per-user, per-sf location of the persisted max-resolution LSH
-    index — same squat-proof root discipline as ann_index_dir."""
-    import os
-
-    from big_data_medical_analysis_spark.operators.common import (
-        per_user_tmpdir,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(per_user_tmpdir("spark_graft_ann_adx"), tag)
-
-
 def ann_adaptive_build(spark: SparkSession, sf_dir: str) -> str:
     """Build + persist the max-resolution (16-bit) sign-LSH index over the
     90% corpus slice, table-partitioned. Banding happens ONCE at B_max;
@@ -3636,7 +3611,7 @@ def ann_adaptive_build(spark: SparkSession, sf_dir: str) -> str:
     (bucket % 2^B — bit r carries weight 2^r), so a re-tune of the serve
     geometry never re-bands the corpus."""
     emb = read_table(spark, sf_dir, "embeddings")
-    out_dir = adx_index_dir(sf_dir)
+    out_dir = invocation_dir("ann_adx")
     adx_lsh_buckets(emb.filter(F.expr(_ANN_INDEX))).write.mode(
         "overwrite"
     ).partitionBy("tbl").parquet(out_dir)
@@ -3672,15 +3647,17 @@ def _adx_serve_bits(index: DataFrame) -> DataFrame:
     )
 
 
-def ann_adaptive_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe-only plan against the ALREADY-persisted max-resolution index:
-    derive serve_bits from the index's exact row count, mask both sides to
-    the serving geometry (bucket % 2^serve_bits), equi-join on
-    (tbl, masked bucket), then exact-cosine rerank — the steady-state
-    batch cost with both the index build AND the geometry re-tune
-    amortized away."""
+def ann_adaptive_serve(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> DataFrame:
+    """Probe-only plan against the ALREADY-persisted max-resolution index
+    in ``index_dir`` (as returned by ``ann_adaptive_build``): derive
+    serve_bits from the index's exact row count, mask both sides to the
+    serving geometry (bucket % 2^serve_bits), equi-join on (tbl, masked
+    bucket), then exact-cosine rerank — the steady-state batch cost with
+    both the index build AND the geometry re-tune amortized away."""
     emb = read_table(spark, sf_dir, "embeddings")
-    index = spark.read.parquet(adx_index_dir(sf_dir)).select(
+    index = spark.read.parquet(index_dir).select(
         F.col("vec_id").alias("cand_id"),
         F.col("tbl").cast("int").alias("tbl"),
         "bucket",
@@ -3858,8 +3835,7 @@ def ann_adaptive_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_candidates > target) — the operational signal to re-band at a
     deeper resolution, which this layout makes a one-pass job.
     """
-    ann_adaptive_build(spark, sf_dir)
-    return ann_adaptive_serve(spark, sf_dir)
+    return ann_adaptive_serve(spark, sf_dir, ann_adaptive_build(spark, sf_dir))
 
 
 ann_adaptive_probe.__doc__ = (

@@ -24,7 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_medical_analysis_spark.operators.common import md5_int
+from big_data_medical_analysis_spark.operators.common import (
+    invocation_dir,
+    md5_int,
+)
 from big_data_medical_analysis_spark.registry import register
 from big_data_medical_analysis_spark.sources.readers import read_table
 
@@ -651,20 +654,6 @@ def daily_event_registers(ev: DataFrame) -> DataFrame:
     return hll_register_rows(h, "day")
 
 
-def hll_state_dir(sf_dir: str) -> str:
-    """Per-user, per-sf location of the persisted daily HLL register table
-    (squat-proof root via common.per_user_tmpdir, same discipline as
-    dedup.pmh_index_dir)."""
-    import os
-
-    from big_data_medical_analysis_spark.operators.common import (
-        per_user_tmpdir,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(per_user_tmpdir("spark_graft_hll_state"), tag)
-
-
 @register("hll_incremental_daily", oracle=_HLL_DAILY_SQL, category="sketch")
 def hll_incremental_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION sketch shape: a per-day HLL register STATE TABLE,
@@ -696,7 +685,7 @@ def hll_incremental_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = read_table(spark, sf_dir, "events")
     state = daily_event_registers(ev)
-    out_dir = hll_state_dir(sf_dir)
+    out_dir = invocation_dir("hll_state")
     state.write.mode("overwrite").partitionBy("day").parquet(out_dir)
     # partition-column type inference may parse the day dir as DATE;
     # normalize back to the 'YYYY-MM-DD' string the scope arithmetic uses
@@ -845,19 +834,6 @@ def daily_value_histogram(ev: DataFrame) -> DataFrame:
     )
 
 
-def hist_state_dir(sf_dir: str) -> str:
-    """Per-user, per-sf location of the persisted daily histogram state
-    table (squat-proof root, same discipline as hll_state_dir)."""
-    import os
-
-    from big_data_medical_analysis_spark.operators.common import (
-        per_user_tmpdir,
-    )
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(per_user_tmpdir("spark_graft_hist_state"), tag)
-
-
 @register(
     "histogram_incremental_daily", oracle=_HIST_DAILY_SQL, category="sketch"
 )
@@ -889,7 +865,7 @@ def histogram_incremental_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = read_table(spark, sf_dir, "events")
     state = daily_value_histogram(ev)
-    out_dir = hist_state_dir(sf_dir)
+    out_dir = invocation_dir("hist_state")
     state.write.mode("overwrite").partitionBy("day").parquet(out_dir)
     back = spark.read.parquet(out_dir).withColumn(
         "day", F.col("day").cast("string")

@@ -22,12 +22,10 @@ from big_data_medical_analysis_spark.operators.common import (
     weight_below,
 )
 from big_data_medical_analysis_spark.registry import register
-from big_data_medical_analysis_spark.sources.readers import read_table
-
-
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
+from big_data_medical_analysis_spark.sources.readers import (
+    read_table,
+    register_views,
+)
 
 
 def _exp1_hash() -> Column:
@@ -91,7 +89,7 @@ def corr_covar_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable aggregate carrying six narrow
     accumulators per group; decimal(38,0) holds Σp² to ~10³⁸ ≈ 10²⁴ rows.
     """
-    _views(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ["lineitem"])
     return spark.sql(_CORR_COVAR_SQL)
 
 
@@ -165,7 +163,7 @@ def regr_price_date_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to any single-pass aggregate — one combine-enabled
     shuffle of seven narrow accumulators per group.
     """
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ["orders"])
     return spark.sql(_REGR_CORE.format(inner=_REGR_INNER_SPARK))
 
 
@@ -224,7 +222,7 @@ def median_mode_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregates over (flag, q) with q ≤ 50 distinct
     values — no sort at all.
     """
-    _views(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ["lineitem"])
     return spark.sql(_MEDIAN_MODE_SQL)
 
 
@@ -299,7 +297,7 @@ def percent_rank_cume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the partition key, one window pass; the probe
     predicate pushes to the scan.
     """
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ["orders"])
     return spark.sql(_PCT_RANK_SQL)
 
 
@@ -341,7 +339,7 @@ def event_label_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned join — the second aggregate and join reuse the
     (user_id) partitioning the first established, so one real shuffle.
     """
-    _views(spark, sf_dir, "events")
+    register_views(spark, sf_dir, ["events"])
     return spark.sql(_ENTROPY_SQL)
 
 
@@ -429,7 +427,7 @@ def frame_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the partition key, one linear window pass over a
     bounded 5-row frame; probe filter pushes to the scan.
     """
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ["orders"])
     return spark.sql(_FRAME_VALUES_SQL)
 
 
@@ -577,7 +575,7 @@ def mad_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     each percentile_disc for the GK sketch (approx_price_quantiles),
     keeping the same two-pass shape.
     """
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ["orders"])
     return spark.sql(_MAD_SQL)
 
 

@@ -25,12 +25,10 @@ from pyspark.sql import functions as F
 
 from big_data_medical_analysis_spark.operators.common import checkpoint_pinned
 from big_data_medical_analysis_spark.registry import register
-from big_data_medical_analysis_spark.sources.readers import read_table
-
-
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
+from big_data_medical_analysis_spark.sources.readers import (
+    read_table,
+    register_views,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +59,7 @@ def small_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg = exact-int-sum / count and 0.2*avg are the same two IEEE ops on
     both engines; output stays in integer cents (no division at all).
     """
-    _views(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ["lineitem"])
     return spark.sql(_SMALL_ORDER_SQL)
 
 
@@ -101,7 +99,7 @@ def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary top-1), and int64 centi-cents make ties exact rather than
     float-accidental.
     """
-    _views(spark, sf_dir, "lineitem", "supplier")
+    register_views(spark, sf_dir, ["lineitem", "supplier"])
     return spark.sql(_TOP_SUPPLIER_SQL)
 
 
@@ -141,7 +139,7 @@ def rich_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     once-evaluated scalar. The avg threshold compares exact int64 cents
     against exact-int-sum/count — bit-identical across engines.
     """
-    _views(spark, sf_dir, "customer", "orders")
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(_RICH_IDLE_SQL)
 
 
@@ -230,7 +228,7 @@ def order_chain_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure scheduler overhead). Each recursive step is an equi-join on the
     SAME key the relations are partitioned by.
     """
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ["orders"])
     k = ORDER_CHAIN_BLOCK
     n_rows = spark.table("orders").count()
     n = max(8, min(spark.sparkContext.defaultParallelism, n_rows // 100_000 + 1))
@@ -315,7 +313,7 @@ def lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible in the rank order ((cents, orderkey) is unique), so LIMIT 2
     is deterministic on both engines.
     """
-    _views(spark, sf_dir, "customer", "orders")
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(_LATERAL_TOPK_SQL)
 
 
@@ -359,7 +357,7 @@ def orders_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is null-safe AND plans as a plain anti join. This query exists
     to pin the semantics of the form users actually write.
     """
-    _views(spark, sf_dir, "customer", "orders")
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(_NOT_IN_SQL)
 
 

@@ -1,17 +1,27 @@
 """operators/common.py: the portable hash kernels agree with their DuckDB
-twins and with a pure-Python md5 reference, row for row."""
+twins and with a pure-Python md5 reference, row for row; scratch state is
+scoped to one invocation, so overlapping calls return the serial answer and
+each process cleans up after itself."""
 
 from __future__ import annotations
 
 import hashlib
+import os
 import random
 import struct
+import subprocess
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
+from conftest import SF_CORRECT
 from pyspark.sql import functions as F
 
+from big_data_medical_analysis_spark import registry
 from big_data_medical_analysis_spark.operators.common import es_key, md5_int
+from tools.selfcheck import value_hash
 
 
 def _keys() -> list[str]:
@@ -103,3 +113,148 @@ def test_es_key_matches_duckdb_twin(spark):
         return sorted(keys, key=lambda i: (keys[i][1], i))
 
     assert order(got) == order(duck)
+
+
+# ---------------------------------------------------------------------------
+# Invocation-scoped scratch state
+# ---------------------------------------------------------------------------
+
+# Every registered query that writes files or tables at construction time
+# and returns a DataFrame that reads them back.
+SCRATCH_QUERIES = [
+    "csv_roundtrip_revenue",
+    "partitioned_parquet_prune",
+    "orc_roundtrip_revenue",
+    "schema_evolution_read",
+    "jsonl_roundtrip_revenue",
+    "corrupt_jsonl_quarantine",
+    "xml_roundtrip_revenue",
+    "dynamic_partition_pruning",
+    "bucketed_colocated_join",
+    "bucketed_fact_chain",
+    "file_provenance_audit",
+    "compact_small_files",
+    "user_erasure_rewrite",
+    "hll_incremental_daily",
+    "histogram_incremental_daily",
+    "minhash_incremental_probe",
+    "ann_incremental_probe",
+    "ann_adaptive_probe",
+    "chexpert_pipeline_twin",
+    "pkl_png_roundtrip",
+]
+
+# The subset whose scratch location once ignored the scale directory too.
+UNSCALED_SCRATCH_QUERIES = [
+    "csv_roundtrip_revenue",
+    "partitioned_parquet_prune",
+    "orc_roundtrip_revenue",
+    "schema_evolution_read",
+    "jsonl_roundtrip_revenue",
+    "xml_roundtrip_revenue",
+    "dynamic_partition_pruning",
+]
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _hash(df) -> str:
+    return value_hash([tuple(r) for r in df.collect()], df.columns)
+
+
+@pytest.mark.parametrize("name", SCRATCH_QUERIES)
+def test_second_build_leaves_first_frame_intact(spark, sf_dir, name):
+    """Build a query's DataFrame twice, then collect both: the first frame
+    still reads its own scratch state, not files the second build replaced."""
+    fn = registry.queries()[name]
+    serial = _hash(fn(spark, sf_dir))
+    first, second = fn(spark, sf_dir), fn(spark, sf_dir)
+    assert _hash(first) == serial
+    assert _hash(second) == serial
+
+
+@pytest.mark.parametrize("name", UNSCALED_SCRATCH_QUERIES)
+def test_builds_at_two_scales_keep_their_own_scratch(spark, sf_dir, name):
+    fn = registry.queries()[name]
+    serial_small, serial_big = _hash(fn(spark, sf_dir)), _hash(fn(spark, SF_CORRECT))
+    small, big = fn(spark, sf_dir), fn(spark, SF_CORRECT)
+    assert _hash(small) == serial_small
+    assert _hash(big) == serial_big
+
+
+def test_concurrent_invocations_return_the_serial_answer(spark, sf_dir):
+    """The paper's pipeline and a bucketed-table query, each run twice at
+    once from two threads of one driver."""
+    for name in ("chexpert_pipeline_twin", "bucketed_fact_chain"):
+        fn = registry.queries()[name]
+        serial = _hash(fn(spark, sf_dir))
+        start = threading.Barrier(2)
+
+        def run():
+            start.wait()
+            return _hash(fn(spark, sf_dir))
+
+        with ThreadPoolExecutor(2) as pool:
+            got = [f.result() for f in [pool.submit(run) for _ in range(2)]]
+        assert got == [serial, serial], name
+
+
+def _scratch_root(tmp_path) -> str:
+    return os.path.join(str(tmp_path), f"spark_graft_scratch_{os.getuid()}")
+
+
+def _run_python(tmp_path, code: str) -> list[str]:
+    """Run ``code`` in a fresh interpreter whose temp dir is ``tmp_path``;
+    returns its stdout lines."""
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", f"import sys; sys.path.insert(0, {_ROOT!r})\n{code}"],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout.split()
+
+
+def test_process_scratch_is_removed_at_normal_exit(tmp_path, sf_dir):
+    got = _run_python(tmp_path, f"""
+import os
+from big_data_medical_analysis_spark import registry
+from big_data_medical_analysis_spark.session import get_spark
+conf = {{"spark.driver.memory": "1g", "spark.ui.enabled": "false"}}
+spark = get_spark("scratch-exit", master="local[1]", extra_conf=conf)
+registry.queries()["orc_roundtrip_revenue"](spark, {sf_dir!r}).collect()
+print(len(os.listdir({_scratch_root(tmp_path)!r})))
+""")
+    assert got[-1] == "1"  # the process's own subdirectory, while it ran
+    assert os.listdir(_scratch_root(tmp_path)) == []
+
+
+def test_forked_child_keeps_parent_scratch(tmp_path):
+    got = _run_python(tmp_path, """
+import os
+from big_data_medical_analysis_spark.operators.common import invocation_dir
+mine = invocation_dir("parent")
+pid = os.fork()
+if pid == 0:
+    invocation_dir("child")
+    sys.exit(0)
+os.waitpid(pid, 0)
+print(os.path.isdir(mine), len(os.listdir(os.path.dirname(os.path.dirname(mine)))))
+""")
+    assert got == ["True", "1"]  # the child removed only its own subdirectory
+    assert os.listdir(_scratch_root(tmp_path)) == []
+
+
+def test_first_call_removes_scratch_of_dead_processes(tmp_path):
+    root = _scratch_root(tmp_path)
+    os.mkdir(root, 0o700)
+    dead_pid = int(_run_python(tmp_path, "import os; print(os.getpid())")[0])
+    dead = os.path.join(root, f"{dead_pid}-abc")
+    live = os.path.join(root, f"{os.getpid()}-abc")
+    for d in (dead, live):
+        os.makedirs(os.path.join(d, "left_behind_0"))
+    _run_python(tmp_path, """
+from big_data_medical_analysis_spark.operators.common import invocation_dir
+invocation_dir("x")
+""")
+    assert os.listdir(root) == [os.path.basename(live)]

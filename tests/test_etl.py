@@ -325,16 +325,19 @@ def test_corrupt_quarantine_preserves_raw_lines(spark, sf_dir):
     corrupt column (that is what makes a dead-letter sink debuggable):
     every quarantined line is exactly the truncated prefix the writer
     emitted, and no parseable line is quarantined."""
+    import os
+    from urllib.parse import urlparse
+
     from pyspark.sql import functions as F
 
     from big_data_medical_analysis_spark.operators.etl import (
-        corrupt_jsonl_dir,
         corrupt_jsonl_quarantine,
         corrupt_jsonl_schema,
     )
 
-    corrupt_jsonl_quarantine(spark, sf_dir)  # materializes the batch dir
-    out_dir = corrupt_jsonl_dir(sf_dir)
+    # the query materializes the batch dir; its frame scans the batch files
+    files = corrupt_jsonl_quarantine(spark, sf_dir).inputFiles()
+    out_dir = os.path.dirname(urlparse(files[0]).path)
     back = (
         spark.read.schema(corrupt_jsonl_schema())
         .option("mode", "PERMISSIVE")
@@ -389,17 +392,14 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     those counts."""
     import math
     import os
+    from urllib.parse import urlparse
 
     from big_data_medical_analysis_spark.operators import etl as E
-    from big_data_medical_analysis_spark.operators.common import (
-        per_user_tmpdir,
-    )
 
-    row = E.compact_small_files(spark, sf_dir).collect()[0]
-    root = os.path.join(
-        per_user_tmpdir("spark_graft_compaction"),
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    df = E.compact_small_files(spark, sf_dir)
+    row = df.collect()[0]
+    # the frame scans <root>/small and <root>/compacted
+    root = os.path.dirname(os.path.dirname(urlparse(df.inputFiles()[0]).path))
 
     def parquet_files(d):
         return [f for f in os.listdir(d)

@@ -138,7 +138,12 @@ def test_all_scratch_paths_go_through_per_user_tmpdir():
     """Convention pin: every scratch location in the engine must come from
     common.per_user_tmpdir (uid-scoped, 0700, ownership-verified). A raw
     tempfile.gettempdir() join reintroduces the squattable-path class the
-    round-9 review closed."""
+    round-9 review closed. Operators take per-call scratch from
+    common.invocation_dir / invocation_table only: a direct per_user_tmpdir
+    call (outside common.py and the npy fixture cache) or a saveAsTable
+    whose name is not an invocation_table name is state shared across
+    calls, which overlapping calls overwrite."""
+    import ast
     import os
     import re
 
@@ -160,4 +165,29 @@ def test_all_scratch_paths_go_through_per_user_tmpdir():
                     offenders.append(f"{path}:{i}")
                 if "getpass.getuser()" in ln:
                     offenders.append(f"{path}:{i}")
+                if "per_user_tmpdir(" in ln and fn != "npy_datasource.py":
+                    offenders.append(f"{path}:{i}")
+            for func in ast.walk(ast.parse(src)):
+                if not isinstance(func, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                fresh = {
+                    t.id
+                    for node in ast.walk(func)
+                    if isinstance(node, ast.Assign)
+                    and isinstance(node.value, ast.Call)
+                    and getattr(node.value.func, "id", None) == "invocation_table"
+                    for t in node.targets
+                    if isinstance(t, ast.Name)
+                }
+                for node in ast.walk(func):
+                    if (
+                        isinstance(node, ast.Call)
+                        and getattr(node.func, "attr", None) == "saveAsTable"
+                        and not (
+                            node.args
+                            and isinstance(node.args[0], ast.Name)
+                            and node.args[0].id in fresh
+                        )
+                    ):
+                        offenders.append(f"{path}:{node.lineno}")
     assert offenders == [], offenders

@@ -322,8 +322,10 @@ def time_build_probe(
     for name, (build, probe) in _split_timers().items():
         if names is not None and name not in names:
             continue
-        build(spark, sf_dir)  # warm-up + guarantee the index exists
-        probe(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        index_dir = build(spark, sf_dir)  # warm-up; the probes read it
+        probe(spark, sf_dir, index_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
         b_best = p_best = float("inf")
         for _ in range(2):
             t = time.time()
@@ -331,7 +333,9 @@ def time_build_probe(
             b_best = min(b_best, time.time() - t)
         for _ in range(2):
             t = time.time()
-            probe(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            probe(spark, sf_dir, index_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
             p_best = min(p_best, time.time() - t)
         out[name] = {"build": round(b_best, 3), "probe": round(p_best, 3)}
     return out
